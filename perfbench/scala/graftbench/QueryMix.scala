@@ -36,7 +36,7 @@ final class QueryMix(spark: SparkSession, gen: Gen, sf: String, warmSf: String,
   var setupRecords = 0L
   var setupSyncS = 0.0
 
-  /** A dataset call's filter: event type index, modulus, remainder. */
+  /** A dataset call's filter: event type, user_id modulus and remainder. */
   private final case class Filter(t: String, m: Int, r: Int) {
     def sql: String = s"event_type = '$t' AND user_id % $m = $r"
     def col = org.apache.spark.sql.functions.expr(sql)
