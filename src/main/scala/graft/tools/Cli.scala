@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.cache.SparkCache
 import graft.mcp.LocalTools
 import graft.sources.{DeclarativeSource, SmokeTest, SmokeTestSource, Source, Sources}
@@ -33,17 +34,6 @@ object Cli {
     val cmd = args.head
     val opts = parseOpts(args.tail)
 
-    def session(): SparkSession = {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      val s = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
-
     def manifestSource(): Source = opts.get("source") match {
       // the built-in scripted source needs no manifest (reference
       // `get_source("source-smoke-test")`, destination_smoke_tests.py:225-230)
@@ -64,7 +54,7 @@ object Cli {
     cmd match {
       case "validate" =>
         val src = manifestSource()
-        val spark = session()
+        val spark = GraftSession.local()
         // spec: declared and parseable
         val spec = src match {
           case d: DeclarativeSource => d.specJson.getOrElse(
@@ -93,7 +83,7 @@ object Cli {
 
       case "sync" =>
         val src = manifestSource()
-        val spark = session()
+        val spark = GraftSession.local()
         val cache = new SparkCache(spark, opts.getOrElse("db", "graft_cache"))
         cache.reopen() // resume into tables from a previous JVM's sync
         val streams = opts.get("streams").map(_.split(',').toSeq).getOrElse(Nil)
@@ -108,7 +98,7 @@ object Cli {
         spark.stop()
 
       case "benchmark" =>
-        val spark = session()
+        val spark = GraftSession.local()
         val n = opts.getOrElse("records", "500000").toInt
         val (secs, rps, _) = IngestBench.measure(spark, n)
         println(f"[cli] benchmark: $n records in $secs%.2f s ($rps records/s)")
@@ -118,7 +108,7 @@ object Cli {
         // full scenario-suite smoke run against the Spark-cache
         // destination (reference `pyab destination-smoke-test`,
         // destination_smoke_tests.py:453-609)
-        val spark = session()
+        val spark = GraftSession.local()
         val result = SmokeTest.run(
           spark,
           scenarios = opts.getOrElse("scenarios", "fast"),
@@ -140,7 +130,7 @@ object Cli {
         if (!result.success) sys.exit(1)
 
       case "destination-smoke-test" =>
-        val spark = session()
+        val spark = GraftSession.local()
         val cache = new SparkCache(spark, opts.getOrElse("db", "graft_cache"))
         cache.reopen() // tables may have been written by a previous JVM
         val stream = opts.getOrElse("stream", fail("--stream is required"))
@@ -154,7 +144,7 @@ object Cli {
       case "sketch" =>
         // operate the streaming sketches the way the reference CLI
         // operates syncs: persist/restore/merge against cache tables
-        val spark = session()
+        val spark = GraftSession.local()
         val cache = new SparkCache(spark, opts.getOrElse("db", "graft_cache"))
         cache.reopen()
         println("[cli] " + runSketch(spark, cache, opts))

@@ -19,8 +19,7 @@ import graft.sources.JsonlSource
  * declared schema + metadata columns → parquet cache table (Append).
  * This is the engine's S1→P1→U1 hot path end-to-end, all executors.
  *
- * Prints one JSON line: {"metric":"ingest","records":N,"sec":…,
- * "records_per_sec":…}.
+ * `Bench` records its figure; `Probe ingest` prints it as one JSON line.
  */
 object IngestBench {
 
@@ -105,21 +104,5 @@ object IngestBench {
         if (fs.exists(p)) fs.delete(p, true)
       }
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("GRAFT_INGEST_RECORDS", "500000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val (sec, rps, _) = measure(spark, n)
-    println(f"""{"metric":"ingest","records":$n,"sec":$sec%.3f,"records_per_sec":$rps}""")
-    spark.stop()
   }
 }

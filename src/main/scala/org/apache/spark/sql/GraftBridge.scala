@@ -19,6 +19,12 @@ object GraftBridge {
   def longInputTypes(n: Int): Seq[types.AbstractDataType] =
     Seq.fill(n)(types.LongType)
 
+  /** Blocks until every event posted so far has reached every listener,
+    * or `timeoutMs` passes (then throws). `SparkContext.listenerBus` is
+    * `private[spark]`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+
   /**
    * Distributed Arrow IPC export (reference S11, `caches/base.py:292-322`
    * — chunked `to_arrow`): each partition's rows become self-describing

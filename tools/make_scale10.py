@@ -6,7 +6,7 @@ for the 30x stress run). Key-offset replication: fact keys are shifted
 per copy so ids stay unique; dimension tables copy as-is. events.parquet
 goes through pyarrow to preserve its TIMESTAMP(NANOS) physical type
 (Tables.load reads nanos-as-long). Run
-`sbt "runMain graft.tools.ScaleBench <DST> <q1,q2,...>"` afterwards for
+`sbt "runMain graft.tools.Probe time --dir <SRC> --vs <DST> q1 q2 ..."` afterwards for
 the sf0.1-vs-Nx wall-clock table.
 """
 import sys
