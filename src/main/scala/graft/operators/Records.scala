@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.names.NameNormalizer
+import graft.protocol.RecordEnvelope
 
 /**
  * Record normalization: raw connector JSON → declared-schema DataFrame
@@ -66,42 +67,57 @@ object Records {
   }
 
   /**
-   * ONE-PASS protocol-envelope normalization — the ingest hot path.
+   * Protocol-envelope normalization — the ingest hot path: the RECORD
+   * envelopes of `lines` ([[protocolEnvelopes]]), the target stream's
+   * records ([[streamRecords]]), each `data` payload parsed against the
+   * declared schema.
    *
-   * Parses each protocol JSONL line ONCE with the full envelope schema
-   * (type, stream, the TYPED `data` payload, emitted_at), filters to
-   * RECORD messages of the target stream, projects the payload, and
-   * stamps `_airbyte_extracted_at` from the record's own emitted_at
-   * (reference `records.py:256`), falling back to now() when absent.
-   *
-   * The two-pass alternative (a Jackson envelope parse inside a typed
-   * `mapPartitions`, then a second `from_json` over the re-extracted
-   * payload text) parses every byte twice and round-trips through
-   * Dataset[String] serialization between the passes. This path is one
-   * codegen'd `from_json` + filter + projection — at 100 TB the JSON
-   * decode is the ingest bottleneck, so halving it doubles throughput.
+   * Each call splits `lines` again. `JsonlSource.read` calls `lines`
+   * once per selected stream and persists the first stream's envelopes,
+   * so the later streams' identical envelope plans read Spark's cached
+   * copy and the file is scanned and tokenized once per read. That reuse
+   * needs `lines` to return datasets with identical plans; with plans
+   * that differ the results stay the same, but the file is split once per
+   * stream again.
    */
   def normalizeProtocol(
       lines: Dataset[String],
       stream: String,
-      declared: StructType): DataFrame = {
-    val envelope = StructType(Seq(
-      StructField("type", StringType),
-      StructField("record", StructType(Seq(
-        StructField("stream", StringType),
-        StructField("data", declared),
-        StructField("emitted_at", LongType))))))
-    val shaped = lines.toDF("_raw")
-      .select(from_json(col("_raw"), envelope).as("m"))
-      .filter(col("m.type") === "RECORD" &&
-        lower(col("m.record.stream")) === stream.toLowerCase(java.util.Locale.ROOT))
-      .select(col("m.record.data.*"),
-        coalesce(timestamp_millis(col("m.record.emitted_at")),
-          current_timestamp()).as("__extracted_src"))
+      declared: StructType): DataFrame =
+    streamRecords(protocolEnvelopes(lines), stream, declared)
+
+  /** Splits a partition's lines; one function value, so every envelope
+    * plan built from the same `lines` plan is the same plan. */
+  private val splitLines: Iterator[String] => Iterator[RecordEnvelope] =
+    _.flatMap(RecordEnvelope.split)
+
+  /** The RECORD envelopes of protocol lines (`stream`, the exact `data`
+    * object text, `emittedAt`), one Jackson streaming pass per line
+    * ([[RecordEnvelope.split]]). Every other line is dropped. */
+  def protocolEnvelopes(lines: Dataset[String]): DataFrame =
+    lines.mapPartitions(splitLines)(Encoders.product[RecordEnvelope]).toDF()
+
+  /**
+   * One stream's records out of [[protocolEnvelopes]] ([[streamEnvelopes]]):
+   * `data` is parsed with `from_json` against the declared schema (a
+   * mistyped field is null, the row is kept; a missing or non-object
+   * `data` gives a row of nulls), and
+   * `_airbyte_extracted_at` is the record's own emitted_at (reference
+   * `records.py:256`), or now() when that is absent.
+   */
+  def streamRecords(envelopes: DataFrame, stream: String, declared: StructType): DataFrame = {
+    val shaped = streamEnvelopes(envelopes, stream)
+      .select(from_json(col("data"), declared).as("r"),
+        coalesce(timestamp_millis(col("emittedAt")), current_timestamp()).as("__extracted_src"))
+      .select(col("r.*"), col("__extracted_src"))
     // wire-case payload names → normalized (see normalize())
     addMetadata(normalizeColumnNames(shaped), Some(col("__extracted_src")))
       .drop("__extracted_src")
   }
+
+  /** The envelopes of one stream; the name matches case-insensitively. */
+  def streamEnvelopes(envelopes: DataFrame, stream: String): DataFrame =
+    envelopes.filter(lower(col("stream")) === stream.toLowerCase(java.util.Locale.ROOT))
 
   /**
    * Normalize with DEAD-LETTER routing: records whose payload fails to

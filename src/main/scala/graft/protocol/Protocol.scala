@@ -1,6 +1,9 @@
 package graft.protocol
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonParser, JsonProcessingException, JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.types.StructType
 
 import graft.names.NameNormalizer
@@ -40,7 +43,12 @@ final case class AirbyteMessage(
     raw: String)
 
 object AirbyteMessage {
-  private val mapper = new ObjectMapper()
+  /** Reads JSON floats as exact BigDecimals, so a payload number keeps
+    * every digit through `dataJson` (a DECIMAL(38,2) value past double
+    * precision would otherwise come back rounded). */
+  private[graft] val mapper: ObjectMapper = new ObjectMapper()
+    .setNodeFactory(JsonNodeFactory.withExactBigDecimals(true))
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
 
   /** Parse one JSONL protocol line. Unknown/garbage lines → None. */
   def parse(line: String): Option[AirbyteMessage] = {
@@ -121,6 +129,75 @@ object AirbyteMessage {
       Option(ctl.get("connectorConfig")).flatMap(cc => Option(cc.get("config")))
         .map(_.toString)
     } catch { case _: Exception => None }
+  }
+}
+
+/** The RECORD envelope of one protocol line: its stream, the `data`
+  * object as the exact text of the line (null when `data` is missing or
+  * not an object) and `emitted_at` in epoch millis. */
+final case class RecordEnvelope(stream: String, data: String, emittedAt: Option[Long])
+
+object RecordEnvelope {
+  /** The features Spark's JSON reader enables by default, so a line the
+    * typed `from_json` reader accepts also splits here. */
+  private val factory = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
+  /**
+   * Split one protocol line with Jackson streaming, in one pass and
+   * without building a tree: `type`, `record.stream` and
+   * `record.emitted_at` are read, and `data` is skipped over and sliced
+   * from the line by char offsets, so its numbers keep every digit.
+   * Field names match exactly and the last duplicate wins, as in Spark's
+   * JSON reader. A non-RECORD line, a RECORD without a stream, and a
+   * line that is not valid JSON give None.
+   */
+  def split(line: String): Option[RecordEnvelope] = {
+    val p = factory.createParser(line)
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) return None
+      var isRecord = false
+      var record: RecordEnvelope = null
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val key = p.currentName()
+        val token = p.nextToken()
+        key match {
+          case "type" => isRecord = token == JsonToken.VALUE_STRING && p.getText == "RECORD"
+          case "record" => record = if (token == JsonToken.START_OBJECT) readRecord(p, line) else null
+          case _ =>
+        }
+        p.skipChildren()
+      }
+      if (isRecord && record != null && record.stream != null) Some(record) else None
+    } catch { case _: JsonProcessingException => None }
+    finally p.close()
+  }
+
+  /** The fields of a `record` object; the parser is left on its END_OBJECT. */
+  private def readRecord(p: JsonParser, line: String): RecordEnvelope = {
+    var stream: String = null
+    var data: String = null
+    var emittedAt: Option[Long] = None
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val key = p.currentName()
+      val token = p.nextToken()
+      key match {
+        case "stream" => stream = if (token.isScalarValue && token != JsonToken.VALUE_NULL) p.getText else null
+        case "data" if token == JsonToken.START_OBJECT =>
+          val from = p.currentTokenLocation().getCharOffset.toInt
+          p.skipChildren()
+          data = line.substring(from, p.currentTokenLocation().getCharOffset.toInt + 1)
+        case "data" => data = null
+        case "emitted_at" => emittedAt =
+          if (token == JsonToken.VALUE_NUMBER_INT &&
+              p.getNumberType != JsonParser.NumberType.BIG_INTEGER) Some(p.getLongValue)
+          else None
+        case _ =>
+      }
+      p.skipChildren()
+    }
+    RecordEnvelope(stream, data, emittedAt)
   }
 }
 

@@ -61,34 +61,34 @@ final class ReadResult(val cache: SparkCache, val streamNames: Seq[String]) {
   def contains(stream: String): Boolean = streamNames.contains(stream)
 }
 
-/** Source over Airbyte-protocol JSONL files/datasets (S1/S3). */
+/** Source over Airbyte-protocol JSONL files/datasets (S1/S3). `lines`
+  * is called once per selected stream on `read`; see there for why it
+  * should return datasets with identical plans. */
 final class JsonlSource(
     val name: String,
     val catalog: ConfiguredCatalog,
     lines: SparkSession => Dataset[String]) extends Source {
 
-  /** Record payloads for one stream, filtered out of the message mix.
-    * Line-level protocol filtering happens distributed (executors parse
-    * only the envelope, with the record payload left as raw JSON). */
+  /** Record payloads for one stream: the exact `data` object text of
+    * its RECORD lines, split on executors like `read` does. */
   override def recordJsonl(spark: SparkSession, stream: String): Dataset[String] = {
     import spark.implicits._
-    val all = lines(spark)
-    all.mapPartitions { it =>
-      it.flatMap { line =>
-        AirbyteMessage.parse(line) match {
-          case Some(m) if m.messageType == MessageType.RECORD &&
-            m.streamName.exists(_.equalsIgnoreCase(stream)) => m.dataJson
-          case _ => None
-        }
-      }
-    }
+    Records.streamEnvelopes(Records.protocolEnvelopes(lines(spark)), stream)
+      .where(col("data").isNotNull).select("data").as[String]
   }
 
-  /** Hot-path override: one codegen'd envelope parse per line
-    * (`Records.normalizeProtocol`) instead of recordJsonl's Jackson
-    * pass + second `from_json` — same projection semantics, half the
-    * JSON decoding. `recordJsonl` stays for the raw-payload surface
-    * (S3 message iterators). */
+  /** Hot-path override: one Jackson envelope split per line
+    * (`Records.protocolEnvelopes`), then a `from_json` over the selected
+    * stream's `data` payloads only.
+    *
+    * `lines` is called once per selected stream, right before that
+    * stream's normalize and write. With more than one stream selected,
+    * the first stream's envelopes are persisted until the read ends, and
+    * the later streams' envelope plans are served from that cache: the
+    * file is scanned and split once per read, not once per stream. The
+    * reuse needs `lines` to return datasets with identical plans; with
+    * plans that differ the results stay the same, but the file is split
+    * once per stream again. */
   override def read(
       cache: SparkCache,
       spark: SparkSession,
@@ -97,12 +97,15 @@ final class JsonlSource(
       forceFullRefresh: Boolean): ReadResult = {
     val selected = if (streams.isEmpty) catalog.streamNames else streams
     cache.preRegisterStreams(selected)
-    selected.foreach { s =>
-      val normalized = Records.normalizeProtocol(lines(spark), s, catalog(s).parseSchema)
+    var shared: Option[DataFrame] = None
+    try selected.foreach { s =>
+      val envelopes = Records.protocolEnvelopes(lines(spark))
+      if (shared.isEmpty && selected.size > 1) shared = Some(envelopes.persist())
+      val normalized = Records.streamRecords(envelopes, s, catalog(s).parseSchema)
       val strategy =
         if (forceFullRefresh) WriteStrategy.Replace else writeStrategy
       cache.writeStream(s, normalized, catalog, strategy)
-    }
+    } finally shared.foreach(_.unpersist())
     new ReadResult(cache, selected)
   }
 }

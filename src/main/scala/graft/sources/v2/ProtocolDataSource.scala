@@ -234,7 +234,7 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
     pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = new ObjectMapper()
+  private val mapper = AirbyteMessage.mapper // exact decimals, as in dataJson
   private val reader = {
     val hp = new Path(file)
     val fs = FileSystem.get(hp.toUri, new Configuration())

@@ -14,8 +14,8 @@ import graft.sources.JsonlSource
  * source → cache, reporting records/s).
  *
  * Pipeline measured: Airbyte-protocol JSONL (one RECORD message per
- * line, pre-staged on disk) → distributed envelope filter
- * (`JsonlSource.recordJsonl`) → `from_json` normalization against the
+ * line, pre-staged on disk) → distributed envelope split
+ * (`Records.protocolEnvelopes`) → `from_json` of each payload against the
  * declared schema + metadata columns → parquet cache table (Append).
  * This is the engine's S1→P1→U1 hot path end-to-end, all executors.
  *
