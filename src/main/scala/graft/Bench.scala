@@ -179,7 +179,7 @@ object Bench {
     // The driver captures only the last 2000 characters of output and
     // parses the JSON line out of that window, so the line must stay
     // well under 2000 chars: per-query detail is limited to a fixed
-    // headline set (ms precision); `value` still totals EVERY query.
+    // headline set (10 ms precision); `value` still totals EVERY query.
     val headline = Set(
       "q1_pricing_summary", "q3_join_agg", "q4_star_join", "q5_topk",
       "q6_window_rank", "q13_json_extract", "q16_sessionization",
@@ -210,8 +210,9 @@ object Bench {
       "q255_dup_transitivity", "q256_decontam_collateral",
       "q260_minhash_calibration", "q265_minhash_k_sweep")
     def ms(v: Double): Double = math.round(v * 1000).toDouble / 1000
+    def r2(v: Double): Double = math.round(v * 100).toDouble / 100
     val qs = results.collect { case (k, v) if headline(k) =>
-      "\"" + k + "\":" + ms(v)
+      "\"" + k + "\":" + r2(v)
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.collect { case (k, v) if v < 0 => k }
@@ -231,8 +232,7 @@ object Bench {
         }
         if (ratios.isEmpty) -1.0 else ratios.sum / ratios.size
       }
-    def r2(v: Double): Double = math.round(v * 100).toDouble / 100
-    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${names.size},"n_failed":${failed.size},"repeats":$repeats,"load_start":${r2(loadStart)},"load_end":${r2(loadEnd)},"spread_ratio":${r2(spreadRatio)},"queries":$qs,"ingest_records_per_sec":$ingestRps,"ingest_trusted":$ingestTrusted,"ingest_load":${r2(ingestLoad)},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${names.size},"n_failed":${failed.size},"repeats":$repeats,"cpus":${GraftSession.cpus},"default_parallelism":${spark.sparkContext.defaultParallelism},"load_start":${r2(loadStart)},"load_end":${r2(loadEnd)},"spread_ratio":${r2(spreadRatio)},"queries":$qs,"ingest_records_per_sec":$ingestRps,"ingest_trusted":$ingestTrusted,"ingest_load":${r2(ingestLoad)},"sf":"$sfDir"}"""
     try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
       val spread =

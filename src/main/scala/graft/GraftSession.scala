@@ -7,9 +7,11 @@ import org.apache.spark.sql.SparkSession
   * partitions, UTC session time, no UI, WARN logging. AQE is Spark's
   * default and is left on. */
 object GraftSession {
+  /** The N of `local[N]`. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   def local(): SparkSession = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

@@ -1,6 +1,6 @@
 package graft.datasets
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 
 import graft.cache.SparkCache
@@ -36,20 +36,18 @@ final class CachedDataset private (
   def withFilter(predicate: Column): CachedDataset =
     new CachedDataset(cache, streamName, plan.filter(predicate), None)
 
-  /** Row count, cached after first evaluation (reference `__len__`, A2). */
+  /** Row count, cached after first evaluation (reference `__len__`, A2).
+    * One job with no exchange ([[GraftBridge.count]]), visible to
+    * listeners as one SQL execution. */
   def count(): Long = cachedCount.getOrElse {
-    val c = plan.count(); cachedCount = Some(c); c
+    val c = GraftBridge.count(plan); cachedCount = Some(c); c
   }
 
-  /** Pull-based iteration without materializing on the driver (Q3). */
-  def iterator(): Iterator[Row] = plan.toLocalIterator().asScala
-
-  private implicit class JIter[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext: Boolean = it.hasNext
-      def next(): T = it.next()
-    }
-  }
+  /** Pull-based iteration in partition order (Q3). Rows are fetched one
+    * chunk of partitions per job ([[GraftBridge.localIterator]]): the
+    * tasks of a chunk run in parallel, and the driver holds at most one
+    * chunk of partitions at a time, not the whole table. */
+  def iterator(): Iterator[Row] = GraftBridge.localIterator(plan)
 
   /** First n rows (reference `fetch_many`/samples, L2/L3). */
   def take(n: Int): Array[Row] = plan.limit(n).collect()
@@ -62,7 +60,7 @@ final class CachedDataset private (
     * executors; consume distributed or `collect()` for a driver-side
     * Arrow table's worth of bytes. */
   def toArrowBatches(maxRecordsPerBatch: Long = 100000L): org.apache.spark.rdd.RDD[Array[Byte]] =
-    org.apache.spark.sql.GraftBridge.toArrowBatches(plan, maxRecordsPerBatch)
+    GraftBridge.toArrowBatches(plan, maxRecordsPerBatch)
 
   /** Column names, internal columns excluded. */
   def columnNames: Seq[String] =

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.errors.GraftInputError
@@ -341,12 +341,11 @@ object LocalTools {
     val out = new java.io.PrintWriter(proc.getOutputStream, false)
     var records = 0L
     try {
-      val it = source.protocolJsonl(spark).toLocalIterator()
-      while (it.hasNext) {
-        val line = it.next()
-        out.println(line)
-        if (line.startsWith("""{"type":"RECORD"""")) records += 1
-      }
+      GraftBridge.localIterator(source.protocolJsonl(spark))
+        .foreach { line =>
+          out.println(line)
+          if (line.startsWith("""{"type":"RECORD"""")) records += 1
+        }
       out.flush()
     } finally {
       out.close()

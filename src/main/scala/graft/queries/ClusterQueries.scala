@@ -918,11 +918,16 @@ object ClusterQueries {
       .localCheckpoint() // k rows; both sides of the pair join
     val a = perLabel.alias("a")
     val b = perLabel.alias("b")
+    // squared centroid distance as a left-to-right sum of 64 element_at
+    // terms (q260/q265's form), which codegen compiles where
+    // aggregate(zip_with(...)) runs interpreted per label pair; the sum
+    // order is the oracle's, so the 6-dp rounding matches
+    val sqDist = (1 to 64).map { i =>
+      val d = element_at(col("a.cent"), i) - element_at(col("b.cent"), i)
+      d * d
+    }.foldLeft(lit(0.0))(_ + _)
     val ratios = a.join(b, col("a.label") =!= col("b.label"))
-      .withColumn("m_ij", round(
-        sqrt(aggregate(
-          zip_with(col("a.cent"), col("b.cent"), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, v) => acc + v)) / 1000000.0, 6))
+      .withColumn("m_ij", round(sqrt(sqDist) / 1000000.0, 6))
       .withColumn("r", round(
         (col("a.s") + col("b.s")) / greatest(col("m_ij"), lit(1e-12)), 4))
     ratios

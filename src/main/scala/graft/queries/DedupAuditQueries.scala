@@ -333,19 +333,20 @@ object DedupAuditQueries {
     // two broadcast builds over the same postings). Collects are
     // BOUNDED at cap+1 (round 17, PostingPairs' convention) so a hot
     // boilerplate shingle never buffers O(df) postings pre-filter.
+    val cap = 50
     val tBuckets = trainSh
       .select(col("id"), col("n"), explode(col("sh")).as("s"))
       .groupBy(col("s"))
       .agg(graft.functions.BoundedCollectList.boundedCollectList(
-        struct(col("id"), col("n")), 51).as("tl"))
-      .filter(size(col("tl")) <= 50)
+        struct(col("id"), col("n")), cap + 1).as("tl"))
+      .filter(size(col("tl")) <= cap)
     val bBuckets = benchSh
       .select(col("id").as("bid"), col("n").as("nb"),
         explode(col("sh")).as("s"))
       .groupBy(col("s"))
       .agg(graft.functions.BoundedCollectList.boundedCollectList(
-        struct(col("bid"), col("nb")), 51).as("bl"))
-      .filter(size(col("bl")) <= 50)
+        struct(col("bid"), col("nb")), cap + 1).as("bl"))
+      .filter(size(col("bl")) <= cap)
     val best = tBuckets.join(bBuckets, "s")
       .select(explode(col("tl")).as("a"), col("bl"))
       .select(col("a"), explode(col("bl")).as("b"))

@@ -242,17 +242,17 @@ object SuffixQueries {
     // COPIES bounds the bucket at 50 classes — replacing the former
     // df-agg + semi-join + fingerprint self-join (which planned the
     // kept-set subtree once per join side).
-    // the cid collect is BOUNDED at 51 (round 17, PostingPairs'
-    // convention): the kept-bucket test is df = Σcopies ≤ 50 and every
-    // class carries ≥ 1 copy, so a bucket with > 51 classes is above
-    // the cap with certainty — a hot fingerprint never buffers O(df)
-    // class ids pre-filter, and kept buckets' lists stay complete
+    // the cid collect is BOUNDED at cap + 1 (round 17, PostingPairs'
+    // convention): df = Σcopies ≤ cap keeps a bucket and every class has
+    // ≥ 1 copy, so a hot fingerprint never buffers O(df) class ids, and
+    // a bucket with more than cap classes is dropped either way
+    val cap = 50
     val copies = classes.select(col("cid"), size(col("members")).as("copies"))
     val buckets = fp.join(copies, "cid")
       .groupBy(col("h"))
       .agg(graft.functions.BoundedCollectList.boundedCollectList(
-        col("cid"), 51).as("cids"), sum(col("copies")).as("df"))
-      .filter(col("df") <= 50)
+        col("cid"), cap + 1).as("cids"), sum(col("copies")).as("df"))
+      .filter(col("df") <= cap)
       .select(col("cids"))
       .localCheckpoint() // read by the pair explode AND the within tally
     val classPairs = buckets

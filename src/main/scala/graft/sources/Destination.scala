@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cache.SparkCache
@@ -15,7 +15,8 @@ import graft.operators.Records
  *
  * The serialization is a distributed `to_json` projection; only the
  * consumption (subprocess stdin pump) is driver-side, via
- * `toLocalIterator` so no full materialization happens.
+ * `GraftBridge.localIterator`, which holds one chunk of partitions at a
+ * time, never the whole table.
  */
 object Destination {
 
@@ -59,7 +60,7 @@ object Destination {
   /**
    * Pump a stream into an external destination process
    * (`cmd` speaking the protocol on stdin). Driver-side consumer over a
-   * lazy iterator — bounded memory regardless of table size.
+   * chunked iterator — one chunk of partitions in memory at a time.
    * Returns records delivered.
    */
   def writeToProcess(
@@ -72,8 +73,8 @@ object Destination {
     val out = new java.io.PrintWriter(proc.getOutputStream, false)
     var n = 0L
     try {
-      val it = recordMessages(cache, streamName).toLocalIterator()
-      while (it.hasNext) { out.println(it.next()); n += 1 }
+      GraftBridge.localIterator(recordMessages(cache, streamName))
+        .foreach { line => out.println(line); n += 1 }
       stateMessage(cache, sourceName, streamName).foreach(out.println)
       out.flush()
     } finally {

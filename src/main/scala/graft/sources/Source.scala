@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cache.SparkCache
@@ -52,11 +52,11 @@ trait Source {
 }
 
 /** Result mapping stream name → CachedDataset (reference ReadResult).
-  * Per-stream row tallies (A5 progress counters) are computed lazily —
-  * one count job per stream on first access, not per write. */
+  * Per-stream row tallies (A5 progress counters) are computed lazily on
+  * first access, every stream in one job ([[GraftBridge.countEach]]). */
 final class ReadResult(val cache: SparkCache, val streamNames: Seq[String]) {
   lazy val counts: Map[String, Long] =
-    streamNames.map(s => s -> cache.table(s).count()).toMap
+    streamNames.zip(GraftBridge.countEach(streamNames.map(cache.table))).toMap
   def apply(stream: String): CachedDataset = new CachedDataset(cache, stream)
   def contains(stream: String): Boolean = streamNames.contains(stream)
 }

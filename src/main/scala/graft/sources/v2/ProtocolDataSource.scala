@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.protocol.{AirbyteMessage, ConfiguredCatalog, MessageType}
+import graft.protocol.{AirbyteMessage, ConfiguredCatalog, RecordEnvelope}
 
 /**
  * DataSourceV2 packaging of the connector-protocol scan (SURVEY §2.1 S1):
@@ -143,7 +143,8 @@ private[v2] class ProtocolScanBuilder(full: StructType,
 
   override def build(): Scan =
     new ProtocolScan(required, options.get("stream"),
-      ProtocolDataSource.listFiles(options), pushed)
+      ProtocolDataSource.listFiles(options), pushed,
+      nowMicros = System.currentTimeMillis() * 1000L)
 }
 
 /** Evaluate pushed comparison filters against the parsed JSON payload. */
@@ -195,9 +196,13 @@ private[v2] object FilterEval {
 
 private[v2] case class ProtocolFilePartition(file: String) extends InputPartition
 
+/** `nowMicros` stamps the records whose `emitted_at` is absent or not a
+  * whole number, one instant per scan, like `current_timestamp()` per
+  * query on the `JsonlSource` path. */
 private[v2] class ProtocolScan(required: StructType, stream: String,
     files: Seq[String],
-    pushed: Array[org.apache.spark.sql.sources.Filter]) extends Scan with Batch {
+    pushed: Array[org.apache.spark.sql.sources.Filter],
+    nowMicros: Long) extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -210,15 +215,15 @@ private[v2] class ProtocolScan(required: StructType, stream: String,
     files.map(ProtocolFilePartition.apply).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ProtocolReaderFactory(required, stream, pushed)
+    new ProtocolReaderFactory(required, stream, pushed, nowMicros)
 }
 
 private[v2] class ProtocolReaderFactory(required: StructType, stream: String,
-    pushed: Array[org.apache.spark.sql.sources.Filter])
+    pushed: Array[org.apache.spark.sql.sources.Filter], nowMicros: Long)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ProtocolFileReader(
-      partition.asInstanceOf[ProtocolFilePartition].file, required, stream, pushed)
+    new ProtocolFileReader(partition.asInstanceOf[ProtocolFilePartition].file,
+      required, stream, pushed, nowMicros)
 }
 
 /**
@@ -231,10 +236,12 @@ private[v2] class ProtocolReaderFactory(required: StructType, stream: String,
  */
 private[v2] class ProtocolFileReader(file: String, required: StructType,
     stream: String,
-    pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    pushed: Array[org.apache.spark.sql.sources.Filter],
+    nowMicros: Long)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = AirbyteMessage.mapper // exact decimals, as in dataJson
+  private val mapper = AirbyteMessage.mapper // exact decimals
+  private val noData = mapper.createObjectNode()
   private val reader = {
     val hp = new Path(file)
     val fs = FileSystem.get(hp.toUri, new Configuration())
@@ -245,16 +252,19 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
   }
   private var row: InternalRow = _
 
+  /** One envelope split and one parse of the exact `data` slice per
+    * line ([[RecordEnvelope.split]], as `JsonlSource` reads). A missing
+    * or non-object `data` gives a row of nulls, and an absent, quoted or
+    * fractional `emitted_at` gives the scan's now(). */
   override def next(): Boolean = {
     var line = reader.readLine()
     while (line != null) {
-      AirbyteMessage.parse(line) match {
-        case Some(m) if m.messageType == MessageType.RECORD &&
-            m.streamName.exists(_.equalsIgnoreCase(stream)) &&
-            m.dataJson.isDefined =>
-          val data = mapper.readTree(m.dataJson.get)
-          if (pushed.forall(FilterEval.eval(_, filterNode(data, m.emittedAt, _)))) {
-            row = convert(data, m.emittedAt)
+      RecordEnvelope.split(line) match {
+        case Some(r) if r.stream.equalsIgnoreCase(stream) =>
+          val data = if (r.data == null) noData else mapper.readTree(r.data)
+          val extractedAt = r.emittedAt.fold(nowMicros)(_ * 1000L) // millis → micros
+          if (pushed.forall(FilterEval.eval(_, filterNode(data, extractedAt, _)))) {
+            row = convert(data, extractedAt)
             return true
           }
         case _ => ()
@@ -274,10 +284,10 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
     * record and the reader would drop all rows. Comparisons on it are
     * never pushed (TimestampType is outside FilterEval.scalar), so a
     * numeric stand-in node is only ever null-checked. */
-  private def filterNode(data: JsonNode, emittedAt: Option[Long],
+  private def filterNode(data: JsonNode, extractedAt: Long,
       name: String): JsonNode =
     if (name.equalsIgnoreCase(ProtocolDataSource.ExtractedAt))
-      emittedAt.map(e => mapper.getNodeFactory.numberNode(e): JsonNode).orNull
+      mapper.getNodeFactory.numberNode(extractedAt)
     else fieldNode(data, name)
 
   private def fieldNode(data: JsonNode, name: String): JsonNode = {
@@ -291,14 +301,13 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
     null
   }
 
-  private def convert(data: JsonNode, emittedAt: Option[Long]): InternalRow = {
+  private def convert(data: JsonNode, extractedAt: Long): InternalRow = {
     val values = new Array[Any](required.length)
     var i = 0
     while (i < required.length) {
       val f = required(i)
       values(i) =
-        if (f.name == ProtocolDataSource.ExtractedAt)
-          emittedAt.map(_ * 1000L).orNull // epoch millis → micros
+        if (f.name == ProtocolDataSource.ExtractedAt) extractedAt
         else {
           val n = fieldNode(data, f.name)
           if (n == null || n.isNull) null

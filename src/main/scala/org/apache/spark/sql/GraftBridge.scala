@@ -25,6 +25,117 @@ object GraftBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** Row count of `df` in one job with no exchange. */
+  def count(df: DataFrame): Long = countEach(Seq(df)).head
+
+  /**
+   * Row counts of several frames in one SQL execution and one job, as
+   * `RDD.count` does: each task counts its partition's rows and the
+   * driver sums them. One frame runs under an empty projection, so the
+   * scan reads only the columns its filters need. Several frames run as
+   * a union tagged with each frame's index. `Dataset.count` instead runs
+   * `groupBy().count()`: a partial aggregate, an `Exchange
+   * SinglePartition` and a final aggregate, which AQE runs as 2 jobs.
+   * A frame whose own plan has exchanges still runs its stage jobs first.
+   */
+  def countEach(dfs: Seq[DataFrame]): Seq[Long] = {
+    if (dfs.isEmpty) return Seq.empty
+    val n = dfs.size
+    val plan =
+      if (n == 1) dfs.head.select()
+      else dfs.zipWithIndex.map { case (df, i) => df.select(functions.lit(i)) }
+        .reduce(_ union _)
+    val qe = plan.queryExecution
+    val perPartition = execution.SQLExecution.withNewExecutionId(qe, Some("count")) {
+      plan.sparkSession.sparkContext.runJob(qe.toRdd, (it: Iterator[catalyst.InternalRow]) => {
+        val c = new Array[Long](n)
+        if (n == 1) c(0) = org.apache.spark.util.Utils.getIteratorSize(it)
+        else it.foreach(r => c(r.getInt(0)) += 1)
+        c
+      })
+    }
+    (0 until n).map(i => perPartition.map(_(i)).sum)
+  }
+
+  /**
+   * Partitions per fetch job of [[localIterator]]: as many partitions as
+   * the plan's estimated bytes per partition fit into a quarter of
+   * `spark.driver.maxResultSize` (0 means no limit), clamped to
+   * `1..parallelism`. A quarter, because the estimate counts stored
+   * (compressed) bytes and decoded rows are larger. An unknown estimate
+   * is `Long.MaxValue` bytes and gives 1, one partition per job.
+   */
+  def iteratorChunk(numPartitions: Int, planBytes: BigInt, maxResultSize: Long,
+      parallelism: Int): Int = {
+    val most = math.max(1, parallelism)
+    if (maxResultSize <= 0) return most
+    val perPartition = (planBytes / math.max(1, numPartitions)).max(1)
+    (BigInt(maxResultSize / 4) / perPartition).max(1).min(most).toInt
+  }
+
+  /**
+   * The rows of `ds` on the driver, in partition order, fetched one chunk
+   * of partitions per job ([[iteratorChunk]]). The tasks of a chunk run
+   * in parallel and at most one chunk is buffered on the driver; the
+   * next chunk's job starts when the buffered one is used up. Each job
+   * is one SQL execution. Spark's own local iterator instead runs one
+   * job per partition, one after another.
+   */
+  def localIterator[T](ds: Dataset[T]): Iterator[T] = {
+    val d = ds.asInstanceOf[classic.Dataset[T]]
+    val qe = d.queryExecution
+    val sc = d.sparkSession.sparkContext
+    val fromRow = d.exprEnc
+      .resolveAndBind(d.logicalPlan.output, d.sparkSession.sessionState.analyzer)
+      .createDeserializer()
+    val width = d.logicalPlan.output.size
+    def inExecution[A](body: => A): A =
+      execution.SQLExecution.withNewExecutionId(qe, Some("localIterator"))(body)
+    def fetch(parts: Seq[Int]): Array[Array[Byte]] = sc.runJob(qe.toRdd, encodeRows, parts)
+    // the first chunk is fetched in the execution that plans the query
+    var pending = Option.empty[Array[Array[Byte]]]
+    val chunks = inExecution {
+      val n = qe.toRdd.partitions.length
+      val k = iteratorChunk(n, qe.optimizedPlan.stats.sizeInBytes,
+        sc.conf.get(org.apache.spark.internal.config.MAX_RESULT_SIZE), sc.defaultParallelism)
+      val all = (0 until n).grouped(k).toSeq
+      pending = all.headOption.map(fetch)
+      all
+    }
+    chunks.iterator.flatMap { parts =>
+      val bytes = pending.getOrElse(inExecution(fetch(parts)))
+      pending = None
+      bytes.iterator.flatMap(decodeRows(_, width))
+    }.map(fromRow)
+  }
+
+  /** A partition's rows as one byte array: each UnsafeRow's size, then
+    * its bytes; -1 ends it. */
+  private val encodeRows: Iterator[catalyst.InternalRow] => Array[Byte] = { it =>
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    val buf = new Array[Byte](4096)
+    it.foreach { r =>
+      val row = r.asInstanceOf[catalyst.expressions.UnsafeRow]
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, buf)
+    }
+    out.writeInt(-1)
+    out.flush()
+    bytes.toByteArray
+  }
+
+  /** The rows of one [[encodeRows]] array; each row points into it. */
+  private def decodeRows(bytes: Array[Byte], width: Int): Iterator[catalyst.InternalRow] = {
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    Iterator.continually(in.getInt()).takeWhile(_ >= 0).map { size =>
+      val row = new catalyst.expressions.UnsafeRow(width)
+      row.pointTo(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + in.position(), size)
+      in.position(in.position() + size)
+      row
+    }
+  }
+
   /**
    * Distributed Arrow IPC export (reference S11, `caches/base.py:292-322`
    * — chunked `to_arrow`): each partition's rows become self-describing

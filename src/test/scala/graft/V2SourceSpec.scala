@@ -110,4 +110,32 @@ class V2SourceSpec extends SparkTestBase {
     assert(df.filter(col("_airbyte_extracted_at").isNotNull).count() == 5)
     assert(df.filter(col("_airbyte_extracted_at").isNull).count() == 0)
   }
+
+  test("emitted_at parity with JsonlSource: quoted and fractional give now()") {
+    val dir = Files.createTempDirectory("graft-v2").toString
+    val lines = Seq(
+      rec("users", """{"id":1}""", 1700000000000L),
+      """{"type":"RECORD","record":{"stream":"users","data":{"id":2},"emitted_at":"1700000000000"}}""",
+      """{"type":"RECORD","record":{"stream":"users","data":{"id":3},"emitted_at":1.7E12}}""",
+      """{"type":"RECORD","record":{"stream":"users","data":{"id":4}}}""",
+      """{"type":"RECORD","record":{"stream":"users","data":[4,5],"emitted_at":5}}""")
+    writeLines(s"$dir/t1.jsonl", lines)
+    val declared = graft.protocol.ConfiguredCatalog.fromCatalogJson(catalogJson)("users").schema
+    val t0 = System.currentTimeMillis()
+    def read(df: org.apache.spark.sql.DataFrame): Seq[(Any, Long)] =
+      df.select("id", "_airbyte_extracted_at").collect().toSeq.map(r =>
+        (r.get(0), r.getTimestamp(1).getTime)).sortBy(_._2)
+    val v2 = read(spark.read.format(fmt)
+      .option("catalogJson", catalogJson).option("stream", "users")
+      .load(s"$dir/t1.jsonl"))
+    val jsonl = read(graft.operators.Records.normalizeProtocol(
+      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING), "users", declared))
+    val t1 = System.currentTimeMillis()
+    for (got <- Seq(v2, jsonl)) {
+      // a non-object data is a row of nulls with its own emitted_at
+      assert(got.take(2) == Seq((null, 5L), (1L, 1700000000000L)), got)
+      assert(got.drop(2).map(_._1).toSet == Set(2L, 3L, 4L), got)
+      assert(got.drop(2).forall { case (_, at) => at >= t0 && at <= t1 }, got)
+    }
+  }
 }
