@@ -144,6 +144,13 @@ object RecordEnvelope {
     .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
     .build()
 
+  /** Parses a `data` slice of [[split]] with the splitter's features and
+    * the exact numbers of [[AirbyteMessage.mapper]], so every slice the
+    * splitter accepts also parses. */
+  val dataMapper: ObjectMapper = new ObjectMapper(factory)
+    .setNodeFactory(JsonNodeFactory.withExactBigDecimals(true))
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+
   /**
    * Split one protocol line with Jackson streaming, in one pass and
    * without building a tree: `type`, `record.stream` and

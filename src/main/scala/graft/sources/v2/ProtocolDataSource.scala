@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.protocol.{AirbyteMessage, ConfiguredCatalog, RecordEnvelope}
+import graft.protocol.{ConfiguredCatalog, RecordEnvelope}
 
 /**
  * DataSourceV2 packaging of the connector-protocol scan (SURVEY §2.1 S1):
@@ -240,7 +240,7 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
     nowMicros: Long)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = AirbyteMessage.mapper // exact decimals
+  private val mapper = RecordEnvelope.dataMapper
   private val noData = mapper.createObjectNode()
   private val reader = {
     val hp = new Path(file)
@@ -319,8 +319,10 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
             case DoubleType => java.lang.Double.valueOf(n.asDouble())
             case BooleanType => java.lang.Boolean.valueOf(n.asBoolean())
             case d: DecimalType =>
-              org.apache.spark.sql.types.Decimal(
+              // NaN, ±Infinity and non-numeric text are null, as in from_json
+              try org.apache.spark.sql.types.Decimal(
                 new java.math.BigDecimal(n.asText()), d.precision, d.scale)
+              catch { case _: NumberFormatException => null }
             case DateType =>
               java.lang.Integer.valueOf(
                 java.time.LocalDate.parse(n.asText()).toEpochDay.toInt)

@@ -30,10 +30,10 @@ object GraftBridge {
 
   /**
    * Row counts of several frames in one SQL execution and one job, as
-   * `RDD.count` does: each task counts its partition's rows and the
-   * driver sums them. One frame runs under an empty projection, so the
-   * scan reads only the columns its filters need. Several frames run as
-   * a union tagged with each frame's index. `Dataset.count` instead runs
+   * `RDD.count` does: the frames run as one union, each row tagged with
+   * its frame's index, and each task counts its partition's rows per
+   * tag for the driver to sum. Column pruning leaves each scan reading
+   * only the columns its filters need. `Dataset.count` instead runs
    * `groupBy().count()`: a partial aggregate, an `Exchange
    * SinglePartition` and a final aggregate, which AQE runs as 2 jobs.
    * A frame whose own plan has exchanges still runs its stage jobs first.
@@ -41,16 +41,13 @@ object GraftBridge {
   def countEach(dfs: Seq[DataFrame]): Seq[Long] = {
     if (dfs.isEmpty) return Seq.empty
     val n = dfs.size
-    val plan =
-      if (n == 1) dfs.head.select()
-      else dfs.zipWithIndex.map { case (df, i) => df.select(functions.lit(i)) }
-        .reduce(_ union _)
+    val plan = dfs.zipWithIndex.map { case (df, i) => df.select(functions.lit(i)) }
+      .reduce(_ union _)
     val qe = plan.queryExecution
     val perPartition = execution.SQLExecution.withNewExecutionId(qe, Some("count")) {
       plan.sparkSession.sparkContext.runJob(qe.toRdd, (it: Iterator[catalyst.InternalRow]) => {
         val c = new Array[Long](n)
-        if (n == 1) c(0) = org.apache.spark.util.Utils.getIteratorSize(it)
-        else it.foreach(r => c(r.getInt(0)) += 1)
+        it.foreach(r => c(r.getInt(0)) += 1)
         c
       })
     }
@@ -58,62 +55,77 @@ object GraftBridge {
   }
 
   /**
-   * Partitions per fetch job of [[localIterator]]: as many partitions as
-   * the plan's estimated bytes per partition fit into a quarter of
-   * `spark.driver.maxResultSize` (0 means no limit), clamped to
-   * `1..parallelism`. A quarter, because the estimate counts stored
-   * (compressed) bytes and decoded rows are larger. An unknown estimate
-   * is `Long.MaxValue` bytes and gives 1, one partition per job.
+   * Partitions per fetch job of [[localIterator]], from the largest
+   * compressed partition fetched so far (0 before the first fetch): as
+   * many as fit into half of `spark.driver.maxResultSize` (0 means no
+   * limit), clamped to `1..parallelism`. Half, so task metrics and
+   * framing never tip a job's results over the limit.
    */
-  def iteratorChunk(numPartitions: Int, planBytes: BigInt, maxResultSize: Long,
-      parallelism: Int): Int = {
+  def iteratorChunk(largestPartition: Long, maxResultSize: Long, parallelism: Int): Int = {
     val most = math.max(1, parallelism)
-    if (maxResultSize <= 0) return most
-    val perPartition = (planBytes / math.max(1, numPartitions)).max(1)
-    (BigInt(maxResultSize / 4) / perPartition).max(1).min(most).toInt
+    if (maxResultSize <= 0 || largestPartition <= 0) most
+    else (maxResultSize / 2 / largestPartition).max(1L).min(most.toLong).toInt
   }
 
   /**
    * The rows of `ds` on the driver, in partition order, fetched one chunk
-   * of partitions per job ([[iteratorChunk]]). The tasks of a chunk run
-   * in parallel and at most one chunk is buffered on the driver; the
-   * next chunk's job starts when the buffered one is used up. Each job
-   * is one SQL execution. Spark's own local iterator instead runs one
-   * job per partition, one after another.
+   * of partitions per job. The tasks of a chunk run in parallel and at
+   * most one chunk is buffered on the driver; the next chunk's job starts
+   * when the buffered one is used up. Each job is one SQL execution.
+   * Spark's own local iterator instead runs one job per partition, one
+   * after another.
+   *
+   * Chunks are sized from measured bytes, not plan statistics: the first
+   * takes `parallelism` partitions, later ones follow [[iteratorChunk]]
+   * over the largest partition seen. A task of a k-partition chunk
+   * returns its rows only if they compress to at most half the
+   * `spark.driver.maxResultSize` over k, else just their size; such a
+   * partition and the ones after it are fetched again in smaller chunks.
+   * A one-partition chunk has no cap, so a job never holds more than the
+   * old one-partition-per-job iterator could.
    */
   def localIterator[T](ds: Dataset[T]): Iterator[T] = {
     val d = ds.asInstanceOf[classic.Dataset[T]]
     val qe = d.queryExecution
     val sc = d.sparkSession.sparkContext
+    val limit = sc.conf.get(org.apache.spark.internal.config.MAX_RESULT_SIZE)
+    val codec = org.apache.spark.io.CompressionCodec.createCodec(sc.conf)
     val fromRow = d.exprEnc
       .resolveAndBind(d.logicalPlan.output, d.sparkSession.sessionState.analyzer)
       .createDeserializer()
     val width = d.logicalPlan.output.size
-    def inExecution[A](body: => A): A =
-      execution.SQLExecution.withNewExecutionId(qe, Some("localIterator"))(body)
-    def fetch(parts: Seq[Int]): Array[Array[Byte]] = sc.runJob(qe.toRdd, encodeRows, parts)
-    // the first chunk is fetched in the execution that plans the query
-    var pending = Option.empty[Array[Array[Byte]]]
-    val chunks = inExecution {
-      val n = qe.toRdd.partitions.length
-      val k = iteratorChunk(n, qe.optimizedPlan.stats.sizeInBytes,
-        sc.conf.get(org.apache.spark.internal.config.MAX_RESULT_SIZE), sc.defaultParallelism)
-      val all = (0 until n).grouped(k).toSeq
-      pending = all.headOption.map(fetch)
-      all
-    }
-    chunks.iterator.flatMap { parts =>
-      val bytes = pending.getOrElse(inExecution(fetch(parts)))
-      pending = None
-      bytes.iterator.flatMap(decodeRows(_, width))
-    }.map(fromRow)
+    var numPartitions = -1 // known once the first execution plans the query
+    var next = 0 // the first partition not fetched yet
+    var largest = 0L
+    /** The partitions from `next` on that fit their chunk's cap; None once
+      * every partition is fetched. */
+    def fetchChunk(): Option[Seq[Array[Byte]]] =
+      if (next == numPartitions) None
+      else execution.SQLExecution.withNewExecutionId(qe, Some("localIterator")) {
+        if (numPartitions < 0) numPartitions = qe.toRdd.partitions.length
+        val k = iteratorChunk(largest, limit, sc.defaultParallelism).min(numPartitions - next)
+        Option.when(k > 0) {
+          val cap = if (k == 1 || limit <= 0) Long.MaxValue else limit / 2 / k
+          val parts = sc.runJob(qe.toRdd, encodeRows(cap), next until next + k)
+          largest = largest.max(parts.map(_._1).max)
+          val fits = parts.toSeq.takeWhile(_._2 != null).map(_._2)
+          next += fits.size
+          fits
+        }
+      }
+    Iterator.continually(fetchChunk()).takeWhile(_.isDefined)
+      .flatMap(_.get.iterator.flatMap(decodeRows(_, width, codec)))
+      .map(fromRow)
   }
 
-  /** A partition's rows as one byte array: each UnsafeRow's size, then
-    * its bytes; -1 ends it. */
-  private val encodeRows: Iterator[catalyst.InternalRow] => Array[Byte] = { it =>
+  /** A partition's rows compressed as Spark's collect sends them (each
+    * UnsafeRow's size, then its bytes; -1 ends it), with the compressed
+    * size. The bytes are null when the size passes `cap`. The size is
+    * known inside the task only through this framing. */
+  private def encodeRows(cap: Long): Iterator[catalyst.InternalRow] => (Long, Array[Byte]) = { it =>
     val bytes = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bytes)
+    val out = new java.io.DataOutputStream(org.apache.spark.io.CompressionCodec
+      .createCodec(org.apache.spark.SparkEnv.get.conf).compressedOutputStream(bytes))
     val buf = new Array[Byte](4096)
     it.foreach { r =>
       val row = r.asInstanceOf[catalyst.expressions.UnsafeRow]
@@ -121,17 +133,24 @@ object GraftBridge {
       row.writeToStream(out, buf)
     }
     out.writeInt(-1)
-    out.flush()
-    bytes.toByteArray
+    out.close()
+    val size = bytes.size.toLong
+    (size, if (size > cap) null else bytes.toByteArray)
   }
 
-  /** The rows of one [[encodeRows]] array; each row points into it. */
-  private def decodeRows(bytes: Array[Byte], width: Int): Iterator[catalyst.InternalRow] = {
-    val in = java.nio.ByteBuffer.wrap(bytes)
-    Iterator.continually(in.getInt()).takeWhile(_ >= 0).map { size =>
+  /** The rows of one [[encodeRows]] array. */
+  private def decodeRows(bytes: Array[Byte], width: Int,
+      codec: org.apache.spark.io.CompressionCodec): Iterator[catalyst.InternalRow] = {
+    val in = new java.io.DataInputStream(
+      codec.compressedInputStream(new java.io.ByteArrayInputStream(bytes)))
+    Iterator.continually(in.readInt()).takeWhile { size =>
+      if (size < 0) in.close()
+      size >= 0
+    }.map { size =>
       val row = new catalyst.expressions.UnsafeRow(width)
-      row.pointTo(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + in.position(), size)
-      in.position(in.position() + size)
+      val data = new Array[Byte](size)
+      in.readFully(data)
+      row.pointTo(data, size)
       row
     }
   }

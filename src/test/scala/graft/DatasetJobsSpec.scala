@@ -86,21 +86,20 @@ class DatasetJobsSpec extends SparkTestBase {
     assert(GraftBridge.count(empty) == 0L)
   }
 
-  test("iteratorChunk: budget by estimated bytes, clamped to 1..parallelism") {
+  test("iteratorChunk: measured bytes per partition, clamped to 1..parallelism") {
     import GraftBridge.iteratorChunk
     val gb = 1L << 30
-    // tiny budget: one partition per job
-    assert(iteratorChunk(8, BigInt(8L << 20), 1000L, 4) == 1)
-    // an unknown size estimate is Long.MaxValue bytes
-    assert(iteratorChunk(8, BigInt(Long.MaxValue), gb, 4) == 1)
-    // huge budget, or no limit: one task per core
-    assert(iteratorChunk(8, BigInt(8000), 1L << 40, 4) == 4)
-    assert(iteratorChunk(8, BigInt(8L << 30), 0L, 4) == 4)
-    // in between: a quarter of the budget over the bytes per partition
-    assert(iteratorChunk(8, BigInt(8L << 20), 8L << 20, 16) == 2)
-    // no partitions, or no known parallelism
-    assert(iteratorChunk(0, BigInt(0), gb, 4) == 4)
-    assert(iteratorChunk(0, BigInt(Long.MaxValue), gb, 4) == 1)
-    assert(iteratorChunk(8, BigInt(8000), gb, 0) == 1)
+    // nothing fetched yet, or no limit: one task per core
+    assert(iteratorChunk(0L, gb, 4) == 4)
+    assert(iteratorChunk(8L << 30, 0L, 4) == 4)
+    // partitions past half the limit: one partition per job
+    assert(iteratorChunk(600L << 20, gb, 4) == 1)
+    assert(iteratorChunk(8L << 20, 1000L, 4) == 1)
+    // small partitions: one task per core
+    assert(iteratorChunk(8000L, gb, 4) == 4)
+    // in between: half the limit over the largest partition
+    assert(iteratorChunk(128L << 20, gb, 16) == 4)
+    // no known parallelism
+    assert(iteratorChunk(8000L, gb, 0) == 1)
   }
 }

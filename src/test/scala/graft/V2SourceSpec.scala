@@ -138,4 +138,27 @@ class V2SourceSpec extends SparkTestBase {
       assert(got.drop(2).forall { case (_, at) => at >= t0 && at <= t1 }, got)
     }
   }
+
+  test("single-quoted and NaN data read as on the JsonlSource path") {
+    val dir = Files.createTempDirectory("graft-v2").toString
+    val lines = Seq(
+      rec("users", """{'id':1,'name':'ann'}""", 1L),
+      rec("users", """{"id":2,"score":NaN}""", 2L),
+      rec("users", """{"id":3,"name":'bo',"score":-Infinity}""", 3L),
+      rec("users", """{"id":4,"score":2.5}""", 4L))
+    writeLines(s"$dir/q1.jsonl", lines)
+    val declared = graft.protocol.ConfiguredCatalog.fromCatalogJson(catalogJson)("users").schema
+    def read(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "name", "score").orderBy("id").collect().toSeq
+    val jsonl = read(graft.operators.Records.normalizeProtocol(
+      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING), "users", declared))
+    val v2 = read(spark.read.format(fmt)
+      .option("catalogJson", catalogJson).option("stream", "users")
+      .load(s"$dir/q1.jsonl"))
+    assert(v2.map(_.getLong(0)) == Seq(1L, 2L, 3L, 4L), v2)
+    assert(v2 == jsonl)
+    // score is DECIMAL(38,9): a non-finite number is null, the row stays
+    assert(v2.map(_.isNullAt(2)) == Seq(true, true, true, false))
+    assert(v2(0).getString(1) == "ann" && v2(2).getString(1) == "bo")
+  }
 }
