@@ -55,9 +55,9 @@ final class BucketedMerge(
       // repartition on the bucket key first: otherwise every write task
       // emits a file per partition value it happens to hold (tasks ×
       // buckets small files); this way each bucket is one task's output
-      WriteStrategies.dedupLatest(withBucket, pks)
+      CacheTables.save(WriteStrategies.dedupLatest(withBucket, pks)
         .repartition(col(BucketCol))
-        .write.partitionBy(BucketCol).saveAsTable(t)
+        .write.partitionBy(BucketCol), t)
       return numBuckets
     }
 

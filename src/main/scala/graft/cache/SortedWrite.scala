@@ -21,9 +21,9 @@ object SortedWrite {
   def writeSorted(
       df: DataFrame, tableName: String,
       sortCols: Seq[String], numFiles: Int): Unit =
-    df.repartitionByRange(numFiles, sortCols.map(col): _*)
+    CacheTables.save(df.repartitionByRange(numFiles, sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).saveAsTable(tableName)
+      .write.mode(SaveMode.Overwrite), tableName)
 
   /**
    * Morton (Z-order) key: bit-interleave two non-negative integer
@@ -71,10 +71,10 @@ object SortedWrite {
         .cast("long")
     val sx = scaled(col(xCol), r.getDouble(0), r.getDouble(1) - r.getDouble(0))
     val sy = scaled(col(yCol), r.getDouble(2), r.getDouble(3) - r.getDouble(2))
-    df.withColumn("__z", mortonKey(sx, sy, bits))
+    CacheTables.save(df.withColumn("__z", mortonKey(sx, sy, bits))
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-      .write.mode(SaveMode.Overwrite).saveAsTable(tableName)
+      .write.mode(SaveMode.Overwrite), tableName)
   }
 }

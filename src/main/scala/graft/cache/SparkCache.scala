@@ -47,10 +47,9 @@ final class SparkCache(
 
   private def metaTable(name: String, schema: StructType): Unit = {
     if (!metaTableExists(name)) {
-      spark.createDataFrame(
+      CacheTables.save(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.ErrorIfExists)
-        .saveAsTable(s"`$database`.`$name`")
+        .write.mode(SaveMode.ErrorIfExists), s"`$database`.`$name`")
     }
   }
 
@@ -132,15 +131,15 @@ final class SparkCache(
         if (tableExists(streamName)) {
           addMissingColumns(streamName, batch.schema)
           val aligned = Records.project(batch, spark.table(t).schema)
-          aligned.write.mode(SaveMode.Append).saveAsTable(t)
-        } else batch.write.saveAsTable(t)
+          CacheTables.save(aligned.write.mode(SaveMode.Append), t)
+        } else CacheTables.save(batch.write, t)
       case WriteStrategy.Replace =>
-        batch.write.mode(SaveMode.Overwrite)
-          .option("overwriteSchema", "true").saveAsTable(t)
+        CacheTables.save(batch.write.mode(SaveMode.Overwrite)
+          .option("overwriteSchema", "true"), t)
       case WriteStrategy.Merge =>
         val pks = catalog.primaryKeys(streamName)
         if (!tableExists(streamName)) {
-          WriteStrategies.dedupLatest(batch, pks).write.saveAsTable(t)
+          CacheTables.save(WriteStrategies.dedupLatest(batch, pks).write, t)
         } else {
           addMissingColumns(streamName, batch.schema)
           val existing = spark.table(t)
@@ -167,8 +166,8 @@ final class SparkCache(
         val orderCols = stream.cursorField.toSeq ++
           Seq(Records.ExtractedAtColumn, Records.RawIdColumn)
         if (!tableExists(streamName)) {
-          WriteStrategies.mergeCdc(None, batch, pks, deleteCol, orderCols)
-            .write.saveAsTable(t)
+          CacheTables.save(
+            WriteStrategies.mergeCdc(None, batch, pks, deleteCol, orderCols).write, t)
         } else {
           addMissingColumns(streamName, batch.schema)
           val existing = spark.table(t)
@@ -190,7 +189,7 @@ final class SparkCache(
     val stamp = graft.names.Ulid.randomSuffix()
     val tmpName = s"__merge_tmp_$stamp"
     val oldName = s"__merge_old_$stamp"
-    result.write.saveAsTable(s"`$database`.`$tmpName`")
+    CacheTables.save(result.write, s"`$database`.`$tmpName`")
     spark.sql(s"ALTER TABLE $t RENAME TO `$database`.`$oldName`")
     spark.sql(s"ALTER TABLE `$database`.`$tmpName` RENAME TO $t")
     spark.sql(s"DROP TABLE IF EXISTS `$database`.`$oldName`")
@@ -222,7 +221,7 @@ final class SparkCache(
     val rows = fresh.map(s => (sourceName, s, tableName(s), "{}"))
       .toDF("source_name", "stream_name", "table_name", "catalog_json")
       .withColumn("registered_at", current_timestamp())
-    rows.write.mode(SaveMode.Append).saveAsTable(s"`$database`.`$StreamsTable`")
+    CacheTables.save(rows.write.mode(SaveMode.Append), s"`$database`.`$StreamsTable`")
     fresh.foreach(s => registered.add((sourceName, s)))
   }
 
@@ -234,10 +233,10 @@ final class SparkCache(
   def writeState(sourceName: String, streamName: String, stateJson: String): Unit = {
     import spark.implicits._
     metaTable(StateTable, stateSchema)
-    Seq((sourceName, streamName, stateJson))
+    CacheTables.save(Seq((sourceName, streamName, stateJson))
       .toDF("source_name", "stream_name", "state_json")
       .withColumn("updated_at", current_timestamp())
-      .write.mode(SaveMode.Append).saveAsTable(s"`$database`.`$StateTable`")
+      .write.mode(SaveMode.Append), s"`$database`.`$StateTable`")
   }
 
   /** Latest state per stream for a source (last-write-wins). */
@@ -319,8 +318,7 @@ final class SparkCache(
         try {
           val partitioned = fs.listStatus(st.getPath)
             .exists(s => s.isDirectory && s.getPath.getName.contains("="))
-          spark.sql(
-            s"CREATE TABLE `$database`.`$t` USING PARQUET LOCATION '${st.getPath}'")
+          CacheTables.attach(spark, s"`$database`.`$t`", st.getPath.toString)
           if (partitioned) spark.sql(s"MSCK REPAIR TABLE `$database`.`$t`")
           Some(t)
         } catch { case _: Exception => None }
@@ -364,7 +362,7 @@ final class SparkCache(
       if (partCols.isEmpty) df.repartition(nFiles).write
       else df.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
         .write.partitionBy(partCols: _*)
-    writer.saveAsTable(s"`$database`.`$tmpName`")
+    CacheTables.save(writer, s"`$database`.`$tmpName`")
     // Partition metadata stores ABSOLUTE directory paths and a table
     // rename does not rewrite them — so after each rename the moved
     // table must be re-synced from its new directory (metadata-only
@@ -455,7 +453,7 @@ object SparkCache {
    * Create a cache database guaranteed fresh even when a previous JVM left
    * files behind: `DROP DATABASE` in a new session's in-memory catalog
    * does not remove an unregistered leftover warehouse directory, so a
-   * later `CREATE TABLE` would fail with LOCATION_ALREADY_EXISTS. We give
+   * later table creation would fail with LOCATION_ALREADY_EXISTS. We give
    * the database an explicit location and physically clear it.
    */
   def fresh(spark: SparkSession, name: String,

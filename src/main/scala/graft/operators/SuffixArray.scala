@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cache.CacheTables
+
 /**
  * Distributed suffix array over a tokenized corpus — prefix doubling
  * (Manber–Myers / the Karp–Miller–Rosenberg scheme), the classic
@@ -295,8 +297,7 @@ object SuffixArray {
       cache.tablePrefix + graft.names.NameNormalizer.normalize(stream))
     spark.sql(s"DROP TABLE IF EXISTS $t")
     val w = df.write.mode("overwrite").option("path", dir.toString)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .saveAsTable(t)
+    CacheTables.save(if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w, t)
   }
 
   /**

@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
  *
  * Spark-first design: there is no MERGE on plain parquet tables, so merge =
  * union(existing, incoming) → window dedup by PK keeping the latest
- * (`_airbyte_extracted_at` desc, `_airbyte_raw_id` desc tiebreak — v7 IDs
- * are time-ordered) → overwrite. At scale the window is one hash shuffle by
- * PK — the same shuffle a SQL MERGE's join would do — and AQE handles skew.
+ * (`_airbyte_extracted_at` desc, `_airbyte_raw_id` desc tiebreak — v7 ids
+ * increase in arrival order within a task, see `Uuid7`) → overwrite. At
+ * scale the window is one hash shuffle by PK — the same shuffle a SQL
+ * MERGE's join would do — and AQE handles skew.
  * For very large final tables a real deployment would use a MERGE-capable
  * table format (Delta/Iceberg); the dedup-window algorithm is identical.
  */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cache.CacheTables
 import graft.cache.SparkCache
 import graft.operators.Records
 import graft.protocol._
@@ -267,9 +268,8 @@ object PipelineQueries {
     val cache = freshCache(spark, "graft_q63")
     val ev = Tables.events(spark, dir)
       .withColumn("event_date", to_date(col("ts")))
-    ev.repartition(col("event_date"))
-      .write.partitionBy("event_date")
-      .saveAsTable(cache.tableName("events_by_day"))
+    CacheTables.save(ev.repartition(col("event_date"))
+      .write.partitionBy("event_date"), cache.tableName("events_by_day"))
     spark.table(cache.tableName("events_by_day"))
       .filter(col("event_date").between("2024-01-10", "2024-01-12"))
       .groupBy(col("event_type"))
@@ -326,7 +326,7 @@ object PipelineQueries {
     // replay the same feed against the applied state — must be a no-op
     val replayed = graft.operators.WriteStrategies.mergeCdc(
       Some(applied), feed, Seq("user_id"), "_cdc_deleted_at", Seq("ts", "event_id"))
-    replayed.write.mode("overwrite").saveAsTable(cache.tableName("profiles"))
+    CacheTables.save(replayed.write.mode("overwrite"), cache.tableName("profiles"))
     spark.table(cache.tableName("profiles"))
       .select(col("user_id"), col("event_type").as("last_type"),
         col("value").as("last_value"))

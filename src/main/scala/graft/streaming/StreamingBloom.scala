@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.cache.CacheTables
 import graft.functions.Mix64Expression
 
 /**
@@ -138,8 +139,8 @@ final class StreamingBloom(val p: Int, val k: Int) {
     import spark.implicits._
     val rows = (-1, p.toLong * 100 + k) +:
       words.zipWithIndex.collect { case (w, i) if w != 0L => (i, w) }.toSeq
-    rows.toDF("j", "w").write.mode("overwrite")
-      .saveAsTable(s"`${cache.database}`.`$name`")
+    CacheTables.save(rows.toDF("j", "w").write.mode("overwrite"),
+      s"`${cache.database}`.`$name`")
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.cache.CacheTables
 import graft.operators.Dedup
 
 /**
@@ -68,8 +69,8 @@ final class StreamingDedup(
       // failed between recording params and writing signatures. Nothing
       // exists to be incompatible with — adopt the current parameters
       // rather than refusing a retry under corrected settings.
-      Seq(paramsRow).toDF("num_hashes", "bands", "shingle", "threshold")
-        .write.mode(SaveMode.Overwrite).saveAsTable(metaTable)
+      CacheTables.save(Seq(paramsRow).toDF("num_hashes", "bands", "shingle", "threshold")
+        .write.mode(SaveMode.Overwrite), metaTable)
     } else if (spark.catalog.tableExists(metaTable)) {
       val (h, b, s, t) = spark.table(metaTable)
         .select("num_hashes", "bands", "shingle", "threshold")
@@ -88,8 +89,8 @@ final class StreamingDedup(
           s"'$metaTable' params table; refusing to resume against an " +
           "index whose build parameters are unknown")
     } else {
-      Seq(paramsRow).toDF("num_hashes", "bands", "shingle", "threshold")
-        .write.mode(SaveMode.ErrorIfExists).saveAsTable(metaTable)
+      CacheTables.save(Seq(paramsRow).toDF("num_hashes", "bands", "shingle", "threshold")
+        .write.mode(SaveMode.ErrorIfExists), metaTable)
     }
   }
 
@@ -133,11 +134,10 @@ final class StreamingDedup(
     // append-only fold: exactly the survivors' (doc, band) rows hit
     // storage; bucketing by band_key keeps future probe joins from
     // shuffling the index side
-    newEntries.write
+    CacheTables.save(newEntries.write
       .mode(SaveMode.Append)
       .bucketBy(indexBuckets, "band_key")
-      .sortBy("band_key")
-      .saveAsTable(indexTable)
+      .sortBy("band_key"), indexTable)
     survivors
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.cache.CacheTables
 import graft.functions.HllAggregate
 
 /**
@@ -90,10 +91,9 @@ final class StreamingDistinct(val p: Int) {
   def saveTo(cache: graft.cache.SparkCache, name: String): Unit = {
     val spark = cache.spark
     import spark.implicits._
-    regs.zipWithIndex.map { case (r, i) => (i, r.toInt) }.toSeq
+    CacheTables.save(regs.zipWithIndex.map { case (r, i) => (i, r.toInt) }.toSeq
       .toDF("j", "r")
-      .write.mode("overwrite")
-      .saveAsTable(s"`${cache.database}`.`$name`")
+      .write.mode("overwrite"), s"`${cache.database}`.`$name`")
   }
 }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cache.CacheTables
+
 /**
  * Streaming distribution-drift monitor — the live face of q130's PSI
  * audit: the FIRST micro-batch freezes the reference (per-key value
@@ -125,10 +127,10 @@ final class StreamingDrift(keyCol: String, valueCol: String, val bins: Int = 10)
   def saveTo(cache: graft.cache.SparkCache, name: String): Unit = {
     val spark = cache.spark
     val t = s"`${cache.database}`.`$name`"
-    reference.getOrElse {
+    CacheTables.save(reference.getOrElse {
       spark.range(0).select(lit("").as("k"), lit(0).cast(IntegerType).as("b"),
         lit(0L).as("cr"), lit(0.0).as("mn"), lit(0.0).as("mx")).limit(0)
-    }.write.mode("overwrite").saveAsTable(t)
+    }.write.mode("overwrite"), t)
   }
 
   /** Keys in `batch` with no reference histogram (schema/category drift). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cache.CacheTables
 import graft.functions.LongGramAggregate
 import graft.operators.IntEigen
 
@@ -130,10 +131,10 @@ final class StreamingEmbeddingDrift(vecCol: String, val d: Int = 64) {
         ("ref", i, v.toString) }) ++
       cumulative.toSeq.flatMap(b => b.zipWithIndex.map { case (v, i) =>
         ("cum", i, v.toString) })
-    rows.toDF("slot", "idx", "val")
+    CacheTables.save(rows.toDF("slot", "idx", "val")
       .select(col("slot"), col("idx"),
         col("val").cast(DecimalType(38, 0)).as("val"))
-      .write.mode("overwrite").saveAsTable(t)
+      .write.mode("overwrite"), t)
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.cache.CacheTables
 import graft.operators.HeavyHitters
 
 /**
@@ -105,9 +106,8 @@ final class StreamingHeavyHitters(val k: Int) {
     import spark.implicits._
     val rows = summary.toSeq.map { case (t, c) => (t, c) } :+
       (StreamingHeavyHitters.NKey, totalN)
-    cache.spark.createDataset(rows).toDF("token", "c")
-      .write.mode("overwrite")
-      .saveAsTable(s"`${cache.database}`.`$name`")
+    CacheTables.save(cache.spark.createDataset(rows).toDF("token", "c")
+      .write.mode("overwrite"), s"`${cache.database}`.`$name`")
   }
 }
 

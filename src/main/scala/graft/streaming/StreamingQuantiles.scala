@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cache.CacheTables
+
 /**
  * Streaming exact-quantile monitor over a QUANTIZED value domain — the
  * sketch-family member that answers "what is p50/p90/p99 of this metric
@@ -119,11 +121,11 @@ final class StreamingQuantiles(keyCol: String, valueCol: String, val scale: Int 
   def saveTo(cache: graft.cache.SparkCache, name: String): Unit = {
     val spark = cache.spark
     val t = s"`${cache.database}`.`$name`"
-    state.getOrElse {
+    CacheTables.save(state.getOrElse {
       spark.range(0).select(lit("").as("k"), lit(0L).as("v"), lit(0L).as("c"))
         .limit(0)
     }.withColumn("sc", lit(scale))
-      .write.mode("overwrite").saveAsTable(t)
+      .write.mode("overwrite"), t)
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.cache.CacheTables
 import graft.functions.Mix64Expression
 
 /**
@@ -82,8 +83,8 @@ final class StreamingReservoir(val k: Int) {
     val spark = cache.spark
     import spark.implicits._
     val rows = (0, 0L, k.toLong) +: sample.map { case (p, key) => (1, p, key) }
-    rows.toDF("tag", "p", "key").write.mode("overwrite")
-      .saveAsTable(s"`${cache.database}`.`$name`")
+    CacheTables.save(rows.toDF("tag", "p", "key").write.mode("overwrite"),
+      s"`${cache.database}`.`$name`")
   }
 }
 

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.cache.CacheTables
+
 /**
  * Streaming trending-terms tracker — decayed heavy hitters over a live
  * text stream (the "what is spiking right now" monitor a crawl
@@ -58,9 +60,9 @@ final class StreamingTrending(textCol: String, k: Int = 10) {
   def saveTo(cache: graft.cache.SparkCache, name: String): Unit = {
     val spark = cache.spark
     val t = s"`${cache.database}`.`$name`"
-    state.getOrElse {
+    CacheTables.save(state.getOrElse {
       spark.range(0).select(lit("").as("term"), lit(0L).as("score")).limit(0)
-    }.write.mode("overwrite").saveAsTable(t)
+    }.write.mode("overwrite"), t)
   }
 
   /**

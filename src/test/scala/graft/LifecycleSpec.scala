@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.cache.SparkCache
+import graft.cache.{CacheTables, SparkCache}
 import graft.datasets.TableStatistics
 import graft.operators.Records
 import graft.protocol._
@@ -63,10 +63,10 @@ class LifecycleSpec extends SparkTestBase {
   test("CLI sketch surface: update → persist → restore → shard merge") {
     val cache = SparkCache.fresh(spark, "graft_test_sketch_cli")
     // two "shards" of ids with overlap: 0..599 and 400..999
-    spark.range(0, 600).toDF("uid")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli`.`shard_a`")
-    spark.range(400, 1000).toDF("uid")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli`.`shard_b`")
+    CacheTables.save(spark.range(0, 600).toDF("uid")
+      .write.mode("overwrite"), "`graft_test_sketch_cli`.`shard_a`")
+    CacheTables.save(spark.range(400, 1000).toDF("uid")
+      .write.mode("overwrite"), "`graft_test_sketch_cli`.`shard_b`")
     def sketch(kv: (String, String)*): String =
       graft.tools.Cli.runSketch(spark, cache, kv.toMap)
 
@@ -129,10 +129,10 @@ class LifecycleSpec extends SparkTestBase {
       graft.tools.Cli.runSketch(spark, cache, kv.toMap)
 
     // --- trending: two shard updates, then a merged union ------------
-    Seq("spark rocks", "spark scales", "ducks quack").toDF("txt")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`texts_a`")
-    Seq("spark wins", "geese honk").toDF("txt")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`texts_b`")
+    CacheTables.save(Seq("spark rocks", "spark scales", "ducks quack").toDF("txt")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`texts_a`")
+    CacheTables.save(Seq("spark wins", "geese honk").toDF("txt")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`texts_b`")
     val ta = sketch("kind" -> "trending", "name" -> "tr_a", "k" -> "5",
       "op" -> "update", "table" -> "texts_a", "column" -> "txt")
     assert(ta.contains("spark:2"), ta) // 2 mentions in shard a
@@ -152,10 +152,10 @@ class LifecycleSpec extends SparkTestBase {
     // --- heavy: skewed tokens, shard merge, threshold report ---------
     val toks = (Seq.fill(60)("hot") ++ Seq.fill(25)("warm") ++
       (1 to 15).map(i => s"cold$i")).zipWithIndex
-    toks.take(50).map(_._1).toDF("tok")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`toks_a`")
-    toks.drop(50).map(_._1).toDF("tok")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`toks_b`")
+    CacheTables.save(toks.take(50).map(_._1).toDF("tok")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`toks_a`")
+    CacheTables.save(toks.drop(50).map(_._1).toDF("tok")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`toks_b`")
     sketch("kind" -> "heavy", "name" -> "hh_a", "k" -> "8",
       "op" -> "update", "table" -> "toks_a", "column" -> "tok")
     sketch("kind" -> "heavy", "name" -> "hh_b", "k" -> "8",
@@ -168,10 +168,10 @@ class LifecycleSpec extends SparkTestBase {
       "op" -> "show", "denom" -> "4") == hm)
 
     // --- drift: freeze reference, then PSI against a shifted batch ---
-    (1 to 100).map(i => ("m1", i.toDouble)).toDF("metric", "v")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`vals_ref`")
-    (1 to 100).map(i => ("m1", i.toDouble + 80)).toDF("metric", "v")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`vals_cur`")
+    CacheTables.save((1 to 100).map(i => ("m1", i.toDouble)).toDF("metric", "v")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`vals_ref`")
+    CacheTables.save((1 to 100).map(i => ("m1", i.toDouble + 80)).toDF("metric", "v")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`vals_cur`")
     val d1 = sketch("kind" -> "drift", "name" -> "dr_1", "bins" -> "10",
       "key-column" -> "metric", "op" -> "update",
       "table" -> "vals_ref", "column" -> "v")
@@ -184,8 +184,8 @@ class LifecycleSpec extends SparkTestBase {
     val psi = d2.split("top_psi\\{m1:")(1).stripSuffix("}").toDouble
     assert(psi > 0.25, s"an 80% range shift must alert (psi=$psi)")
     // shard merge: a second monitor over a DISJOINT key unions in
-    (1 to 50).map(i => ("m2", i * 2.0)).toDF("metric", "v")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`vals_m2`")
+    CacheTables.save((1 to 50).map(i => ("m2", i * 2.0)).toDF("metric", "v")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`vals_m2`")
     sketch("kind" -> "drift", "name" -> "dr_2", "bins" -> "10",
       "key-column" -> "metric", "op" -> "update",
       "table" -> "vals_m2", "column" -> "v")
@@ -194,10 +194,10 @@ class LifecycleSpec extends SparkTestBase {
     assert(dm.contains("keys=2"), dm)
 
     // --- quantile: shard updates, exact merged p50/p90/p99 -----------
-    (1 to 60).map(i => ("lat", i.toDouble)).toDF("metric", "v")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`lat_a`")
-    (61 to 100).map(i => ("lat", i.toDouble)).toDF("metric", "v")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`lat_b`")
+    CacheTables.save((1 to 60).map(i => ("lat", i.toDouble)).toDF("metric", "v")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`lat_a`")
+    CacheTables.save((61 to 100).map(i => ("lat", i.toDouble)).toDF("metric", "v")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`lat_b`")
     sketch("kind" -> "quantile", "name" -> "qt_a", "scale" -> "100",
       "key-column" -> "metric", "op" -> "update",
       "table" -> "lat_a", "column" -> "v")
@@ -218,8 +218,8 @@ class LifecycleSpec extends SparkTestBase {
     def emb(axis: Int, n: Int) = Seq.fill(n)(
       (0 until 8).map(i => ((if (i == axis) rnd.nextGaussian() * 4 else 0.0)
         + rnd.nextGaussian() * 0.2).toFloat))
-    emb(2, 200).toDF("vec")
-      .write.mode("overwrite").saveAsTable("`graft_test_sketch_cli2`.`emb_a`")
+    CacheTables.save(emb(2, 200).toDF("vec")
+      .write.mode("overwrite"), "`graft_test_sketch_cli2`.`emb_a`")
     val e1 = sketch("kind" -> "embdrift", "name" -> "ed_1", "dim" -> "8",
       "op" -> "update", "table" -> "emb_a", "column" -> "vec")
     assert(e1.contains("cosine=1.0000"), e1) // first fold: cum == ref

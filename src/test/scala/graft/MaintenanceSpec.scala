@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.cache.SparkCache
+import graft.cache.{CacheTables, SparkCache}
 import graft.sources.Tables
 
 /** Cache maintenance: small-file compaction and partition retention. */
@@ -15,11 +15,11 @@ class MaintenanceSpec extends SparkTestBase {
     // database name THIS session has never registered — exactly what a
     // fresh JVM sees: files on disk, nothing in the in-memory catalog.
     val cacheA = SparkCache.fresh(spark, "graft_test_reopen_a")
-    Tables.orders(spark, "/root/testdata/sf0.001").limit(100)
-      .write.saveAsTable(cacheA.tableName("orders_plain"))
-    Tables.orders(spark, "/root/testdata/sf0.001").limit(100)
+    CacheTables.save(Tables.orders(spark, "/root/testdata/sf0.001").limit(100)
+      .write, cacheA.tableName("orders_plain"))
+    CacheTables.save(Tables.orders(spark, "/root/testdata/sf0.001").limit(100)
       .withColumn("bucket", col("o_orderkey") % 4)
-      .write.partitionBy("bucket").saveAsTable(cacheA.tableName("orders_part"))
+      .write.partitionBy("bucket"), cacheA.tableName("orders_part"))
     val srcDir = java.nio.file.Paths.get(java.net.URI.create(
       spark.catalog.getDatabase("graft_test_reopen_a").locationUri))
     val dstDir = srcDir.resolveSibling("graft_test_reopen_b.db")
@@ -46,7 +46,7 @@ class MaintenanceSpec extends SparkTestBase {
     val cache = SparkCache.fresh(spark, "graft_test_compact")
     val o = Tables.orders(spark, "/root/testdata/sf0.001")
     // simulate many small sync outputs: 20 files
-    o.repartition(20).write.saveAsTable(cache.tableName("orders_nopk"))
+    CacheTables.save(o.repartition(20).write, cache.tableName("orders_nopk"))
     val before = spark.table(cache.tableName("orders_nopk"))
     val beforeFiles = before.inputFiles.length
     val beforeAgg = before.agg(count(lit(1)), sum(col("o_orderkey")))
@@ -64,7 +64,7 @@ class MaintenanceSpec extends SparkTestBase {
   test("analyzeTable records CBO row counts and column stats in the catalog") {
     val cache = SparkCache.fresh(spark, "graft_test_analyze")
     val o = Tables.orders(spark, "/root/testdata/sf0.001")
-    o.write.saveAsTable(cache.tableName("orders_nopk"))
+    CacheTables.save(o.write, cache.tableName("orders_nopk"))
     val expected = o.count()
 
     val rows = cache.analyzeTable("orders_nopk")
@@ -83,8 +83,8 @@ class MaintenanceSpec extends SparkTestBase {
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("event_date", to_date(col("ts")).cast("string"))
     // many small files per partition dir (5 tasks × days)
-    ev.repartition(5).write.partitionBy("event_date")
-      .saveAsTable(cache.tableName("events_by_day"))
+    CacheTables.save(ev.repartition(5).write.partitionBy("event_date"),
+      cache.tableName("events_by_day"))
     val t = cache.tableName("events_by_day")
     val beforeCount = spark.table(t).count()
     val beforeParts = spark.sql(s"SHOW PARTITIONS $t").count()
@@ -108,15 +108,15 @@ class MaintenanceSpec extends SparkTestBase {
   test("retention escapes quoted values and rejects multi-column partition specs") {
     val cache = SparkCache.fresh(spark, "graft_test_expire_edge")
     import spark.implicits._
-    Seq(("a'b", 1L), ("m", 2L), ("zz", 3L)).toDF("day", "v")
-      .write.partitionBy("day").saveAsTable(cache.tableName("quoted"))
+    CacheTables.save(Seq(("a'b", 1L), ("m", 2L), ("zz", 3L)).toDF("day", "v")
+      .write.partitionBy("day"), cache.tableName("quoted"))
     // the quoted value sorts below "m" and must drop without breaking SQL
     val dropped = cache.expirePartitions("quoted", "day", "m")
     assert(dropped == Seq("a'b"))
     assert(spark.table(cache.tableName("quoted")).count() == 2)
 
-    Seq(("2024", "x", 1L)).toDF("y", "c", "v")
-      .write.partitionBy("y", "c").saveAsTable(cache.tableName("multi"))
+    CacheTables.save(Seq(("2024", "x", 1L)).toDF("y", "c", "v")
+      .write.partitionBy("y", "c"), cache.tableName("multi"))
     intercept[IllegalArgumentException](
       cache.expirePartitions("multi", "y", "2025"))
     cache.dropAll()
@@ -126,9 +126,8 @@ class MaintenanceSpec extends SparkTestBase {
     val cache = SparkCache.fresh(spark, "graft_test_expire")
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("event_date", to_date(col("ts")).cast("string"))
-    ev.repartition(col("event_date"))
-      .write.partitionBy("event_date")
-      .saveAsTable(cache.tableName("events_by_day"))
+    CacheTables.save(ev.repartition(col("event_date"))
+      .write.partitionBy("event_date"), cache.tableName("events_by_day"))
     val allDays = spark.table(cache.tableName("events_by_day"))
       .select("event_date").distinct().as[String].collect().sorted
     val cutoff = allDays(allDays.length / 2)

@@ -317,4 +317,28 @@ class OperatorsSpec extends SparkTestBase {
     val after = graft.functions.Uuid7.next()
     assert(before < after) // time-sortable (constants.py:23-33 rationale)
   }
+
+  test("uuid7 row ids: distinct across 8 partitions, strictly increasing within each") {
+    val rfc = "[0-9a-f]{8}-[0-9a-f]{4}-7[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}"
+    // whole-stage codegen path: a range partition yields its rows in id order
+    val rows = spark.range(0, 40000, 1, 8)
+      .select(spark_partition_id().as("p"), col("id"),
+        graft.functions.functions.uuid7().as("u"))
+      .as[(Int, Long, String)].collect()
+    assert(rows.map(_._3).distinct.length == 40000)
+    assert(rows.forall(_._3.matches(rfc)))
+    val byPart = rows.groupBy(_._1)
+    assert(byPart.size == 8 && byPart.values.forall(_.length == 5000))
+    byPart.values.foreach { part =>
+      val ids = part.sortBy(_._2).map(_._3)
+      assert(ids.sliding(2).forall { case Array(a, b) => a < b },
+        "ids must strictly increase in row order within a partition")
+    }
+    // interpreted path: one generator per initialized partition
+    val e = graft.functions.Uuid7Expression()
+    e.initialize(0)
+    val interp = Seq.fill(5000)(e.eval().toString)
+    assert(interp.forall(_.matches(rfc)))
+    assert(interp.sliding(2).forall { case Seq(a, b) => a < b })
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.cache.SparkCache
+import graft.cache.{CacheTables, SparkCache}
 import graft.sources.Tables
 
 /** The partitioned-layout contract: a date-filtered read of a
@@ -15,9 +15,8 @@ class PartitionPruningSpec extends SparkTestBase {
     val cache = SparkCache.fresh(spark, "graft_test_prune")
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("event_date", to_date(col("ts")))
-    ev.repartition(col("event_date"))
-      .write.partitionBy("event_date")
-      .saveAsTable(cache.tableName("events_by_day"))
+    CacheTables.save(ev.repartition(col("event_date"))
+      .write.partitionBy("event_date"), cache.tableName("events_by_day"))
 
     val filtered = spark.table(cache.tableName("events_by_day"))
       .filter(col("event_date") === "2024-01-10")

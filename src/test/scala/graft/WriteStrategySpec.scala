@@ -126,6 +126,24 @@ class WriteStrategySpec extends SparkTestBase {
     assert(out.count() == 1)
   }
 
+  test("a Merge tie on extracted_at goes to the later line of the batch") {
+    // two versions of id=1 stamped with the same extraction time in one
+    // single-partition batch: the monotonic raw id decides, so the
+    // second line wins every run (random raw ids picked either)
+    val cache = SparkCache.fresh(spark, "graft_test_merge_tie")
+    (1 to 5).foreach { run =>
+      val lines = spark.range(0, 2, 1, numPartitions = 1)
+        .select(lit(1L).as("id"), concat(lit(s"r${run}_line"), col("id")).as("name"),
+          col("id").cast(DoubleType).as("score"))
+      val at = lit(s"2020-01-0$run 00:00:00").cast(TimestampType)
+      cache.writeStream("s_pk", Records.addMetadata(lines, Some(at)),
+        catalog, WriteStrategy.Merge)
+      assert(cache.table("s_pk").select("name").as[String].collect().toSeq ==
+        Seq(s"r${run}_line1"), s"run $run")
+    }
+    cache.dropAll()
+  }
+
   test("mergeCdc: winning delete removes the key; replay cannot resurrect it") {
     // feed keyed by id, cursor = ver; id=2's LAST change is a delete
     val feed = Seq(
