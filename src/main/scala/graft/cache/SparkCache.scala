@@ -1,6 +1,6 @@
 package graft.cache
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -136,70 +136,81 @@ final class SparkCache(
       case WriteStrategy.Replace =>
         CacheTables.save(batch.write.mode(SaveMode.Overwrite)
           .option("overwriteSchema", "true"), t)
-      case WriteStrategy.Merge =>
+      case WriteStrategy.Merge | WriteStrategy.CdcDelete =>
         val pks = catalog.primaryKeys(streamName)
-        if (!tableExists(streamName)) {
-          CacheTables.save(WriteStrategies.dedupLatest(batch, pks).write, t)
-        } else {
-          addMissingColumns(streamName, batch.schema)
-          val existing = spark.table(t)
-          // round 17: probe the stream's PK skew ONCE per cache
-          // instance — a sync session that merges the same stream
-          // repeatedly (q20 runs three) paid a full sampled scan of
-          // both merge sides per merge for a plan choice that cannot
-          // change results (both dedup plans are output-identical,
-          // WriteStrategySpec-pinned) and rarely changes verdict
-          // within a session
-          val skewed = skewProbed.getOrElseUpdate(t,
-            WriteStrategies.probeSkew(
-              existing.unionByName(batch, allowMissingColumns = true), pks))
-          stageAndSwap(
-            WriteStrategies.merge(Some(existing), batch, pks, Some(skewed)), t)
-        }
-      case WriteStrategy.CdcDelete =>
-        val pks = catalog.primaryKeys(streamName)
-        val stream = catalog(streamName)
-        val deleteCol = stream.cdcDeletedAtField.getOrElse("_ab_cdc_deleted_at")
-        // CDC ordering: the stream's cursor (LSN / commit ts) outranks
-        // arrival metadata — an out-of-order redelivery within the batch
-        // must not resurrect a deleted key.
-        val orderCols = stream.cursorField.toSeq ++
-          Seq(Records.ExtractedAtColumn, Records.RawIdColumn)
-        if (!tableExists(streamName)) {
-          CacheTables.save(
-            WriteStrategies.mergeCdc(None, batch, pks, deleteCol, orderCols).write, t)
-        } else {
-          addMissingColumns(streamName, batch.schema)
-          val existing = spark.table(t)
-          stageAndSwap(
-            WriteStrategies.mergeCdc(Some(existing), batch, pks, deleteCol, orderCols), t)
-        }
+        val existing =
+          if (tableExists(streamName)) {
+            addMissingColumns(streamName, batch.schema)
+            Some(spark.table(t))
+          } else None
+        val merged =
+          if (method == WriteStrategy.Merge) WriteStrategies.merge(existing, batch, pks)
+          else {
+            val stream = catalog(streamName)
+            // CDC ordering: the stream's cursor (LSN / commit ts) outranks
+            // arrival metadata — an out-of-order redelivery within the
+            // batch must not resurrect a deleted key.
+            WriteStrategies.mergeCdc(existing, batch, pks,
+              stream.cdcDeletedAtField.getOrElse("_ab_cdc_deleted_at"),
+              stream.cursorField.toSeq ++ Seq(Records.ExtractedAtColumn, Records.RawIdColumn))
+          }
+        // parquet can't overwrite a table its own plan reads: stage the
+        // result once and swap it in by rename
+        if (existing.isEmpty) CacheTables.save(merged.write, t)
+        else stageAndSwap(merged.write, t, partitioned = false)
       case WriteStrategy.Auto => throw new IllegalStateException("unreachable")
     }
     registerStream(streamName)
   }
 
-  /** Parquet can't overwrite a table its own plan reads, so stage the
-    * result once and swap by rename — the reference's swap dance
-    * (sql_processor.py:1061-1087), metadata-only, single data write. */
-  private def stageAndSwap(result: DataFrame, t: String): Unit = {
+  /** Write `writer`'s output to a fresh `__swap_new_*` table and [[swap]]
+    * it in for `target`. A failed write leaves `target` untouched. */
+  private def stageAndSwap(writer: DataFrameWriter[Row], target: String,
+      partitioned: Boolean): Unit = {
     // time-sortable 9-char ULID slice, the reference's temp-name suffix
     // discipline (sql_processor.py:592-612) — concurrent swap artifacts
     // list in creation order
-    val stamp = graft.names.Ulid.randomSuffix()
-    val tmpName = s"__merge_tmp_$stamp"
-    val oldName = s"__merge_old_$stamp"
-    CacheTables.save(result.write, s"`$database`.`$tmpName`")
-    spark.sql(s"ALTER TABLE $t RENAME TO `$database`.`$oldName`")
-    spark.sql(s"ALTER TABLE `$database`.`$tmpName` RENAME TO $t")
-    spark.sql(s"DROP TABLE IF EXISTS `$database`.`$oldName`")
+    val staged = s"__swap_new_${graft.names.Ulid.randomSuffix()}"
+    CacheTables.save(writer, s"`$database`.`$staged`")
+    swap(staged, target, partitioned)
   }
 
-  // Merge skew-probe verdict per table (round 17): a PLAN-choice memo,
-  // not a result memo — see the Merge branch above. Scoped to this
-  // cache instance, so a fresh cache (every bench/oracle run constructs
-  // one) always re-probes its first merge.
-  private val skewProbed = scala.collection.mutable.Map.empty[String, Boolean]
+  /**
+   * Replace table `target` with the staged table `staged` (a name in this
+   * database) by two metadata-only renames — the reference's temp/final
+   * swap (sql_processor.py:1061-1087). Rollback-safe: if the staged table
+   * can't take `target`'s name, the original is renamed back and the
+   * staged table dropped, so `target` keeps its rows under its own name
+   * and no `__*` table is left; the error propagates.
+   *
+   * Partition metadata stores ABSOLUTE directory paths and a rename does
+   * not rewrite them, so a `partitioned` table is re-synced from its new
+   * directory after each rename (metadata-only listing); otherwise a later
+   * DROP would purge the paths its stale metadata still points at: the
+   * *new* table's data.
+   */
+  private[graft] def swap(staged: String, target: String, partitioned: Boolean): Unit = {
+    def qualified(name: String) = s"`$database`.`$name`"
+    def repair(table: String): Unit =
+      if (partitioned) spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
+    val old = qualified(s"__swap_old_${graft.names.Ulid.randomSuffix()}")
+    try spark.sql(s"ALTER TABLE $target RENAME TO $old")
+    catch {
+      case e: Throwable =>
+        spark.sql(s"DROP TABLE IF EXISTS ${qualified(staged)}"); throw e
+    }
+    repair(old)
+    try spark.sql(s"ALTER TABLE ${qualified(staged)} RENAME TO $target")
+    catch {
+      case e: Throwable => // restore the original under its name
+        spark.sql(s"ALTER TABLE $old RENAME TO $target")
+        repair(target)
+        spark.sql(s"DROP TABLE IF EXISTS ${qualified(staged)}")
+        throw e
+    }
+    repair(target)
+    spark.sql(s"DROP TABLE IF EXISTS $old")
+  }
 
   // Registration is idempotent per (source, stream): memoize so repeat
   // syncs of the same stream skip the 1-row append job (~0.3 s each).
@@ -312,7 +323,7 @@ final class SparkCache(
     if (!fs.exists(dbPath)) return Seq.empty
     fs.listStatus(dbPath).filter(_.isDirectory).toSeq.flatMap { st =>
       val t = st.getPath.getName
-      if (t.startsWith("__")) None // merge/compaction staging leftovers
+      if (t.startsWith("__")) None // `__swap_*` leftovers of an interrupted swap
       else if (spark.catalog.tableExists(s"`$database`.`$t`")) None
       else
         try {
@@ -329,7 +340,7 @@ final class SparkCache(
   // Maintenance: the two table-ops a long-lived cache needs at scale.
   // Append/merge syncs accrete small files (tasks × syncs); old
   // partitions accrete forever. Compaction rewrites once and swaps by
-  // rename (same metadata-only dance as merge); retention drops whole
+  // rename (the same [[swap]] as merge); retention drops whole
   // partition DIRECTORIES — no data rewrite at all.
   // ------------------------------------------------------------------
 
@@ -340,8 +351,7 @@ final class SparkCache(
    * the partition columns (one output file per partition directory) and
    * rewritten with the same `partitionBy`, so `SHOW PARTITIONS` /
    * partition pruning keep working after compaction. The swap is
-   * rollback-safe: if the new table can't take the original name, the
-   * original is restored and the temp dropped. Returns the file count
+   * [[swap]], rollback-safe like every merge's. Returns the file count
    * after compaction.
    */
   def compactTable(streamName: String, targetFileBytes: Long = 128L << 20): Int = {
@@ -355,38 +365,11 @@ final class SparkCache(
     val bytes = df.inputFiles.map(f =>
       fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val stamp = graft.names.Ulid.randomSuffix()
-    val tmpName = s"__compact_tmp_$stamp"
-    val oldName = s"__compact_old_$stamp"
     val writer =
       if (partCols.isEmpty) df.repartition(nFiles).write
       else df.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
         .write.partitionBy(partCols: _*)
-    CacheTables.save(writer, s"`$database`.`$tmpName`")
-    // Partition metadata stores ABSOLUTE directory paths and a table
-    // rename does not rewrite them — so after each rename the moved
-    // table must be re-synced from its new directory (metadata-only
-    // listing), or a later DROP would purge the paths its stale
-    // metadata still points at: the *new* table's data.
-    def repair(name: String): Unit =
-      if (partCols.nonEmpty)
-        spark.sql(s"MSCK REPAIR TABLE `$database`.`$name` SYNC PARTITIONS")
-    try spark.sql(s"ALTER TABLE $t RENAME TO `$database`.`$oldName`")
-    catch {
-      case e: Throwable =>
-        spark.sql(s"DROP TABLE IF EXISTS `$database`.`$tmpName`"); throw e
-    }
-    repair(oldName)
-    try spark.sql(s"ALTER TABLE `$database`.`$tmpName` RENAME TO $t")
-    catch {
-      case e: Throwable => // restore the original under its name
-        spark.sql(s"ALTER TABLE `$database`.`$oldName` RENAME TO $t")
-        if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t SYNC PARTITIONS")
-        spark.sql(s"DROP TABLE IF EXISTS `$database`.`$tmpName`")
-        throw e
-    }
-    if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t SYNC PARTITIONS")
-    spark.sql(s"DROP TABLE IF EXISTS `$database`.`$oldName`")
+    stageAndSwap(writer, t, partitioned = partCols.nonEmpty)
     spark.catalog.refreshTable(t)
     spark.table(t).inputFiles.length
   }

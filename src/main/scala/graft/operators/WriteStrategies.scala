@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -19,13 +18,15 @@ import org.apache.spark.sql.functions._
  *   append twice ⇒ 2N rows; replace twice ⇒ N; merge re-run ⇒ idempotent N.
  *
  * Spark-first design: there is no MERGE on plain parquet tables, so merge =
- * union(existing, incoming) → window dedup by PK keeping the latest
- * (`_airbyte_extracted_at` desc, `_airbyte_raw_id` desc tiebreak — v7 ids
- * increase in arrival order within a task, see `Uuid7`) → overwrite. At
- * scale the window is one hash shuffle by PK — the same shuffle a SQL
- * MERGE's join would do — and AQE handles skew.
- * For very large final tables a real deployment would use a MERGE-capable
- * table format (Delta/Iceberg); the dedup-window algorithm is identical.
+ * union(existing, incoming) → keep the latest version per PK
+ * (`_airbyte_extracted_at`, then `_airbyte_raw_id` as the tiebreak — v7 ids
+ * increase in arrival order within a task, see `Uuid7`) → overwrite. The
+ * dedup is one `max_by` hash aggregate: its partial aggregate runs below
+ * the PK exchange, so a hot key collapses to one row per mapper before
+ * any shuffle, and the one exchange is the same shuffle a SQL MERGE's
+ * join would do. For very large final tables a real deployment would use
+ * a MERGE-capable table format (Delta/Iceberg); the last-wins rule is
+ * identical.
  */
 object WriteStrategies {
 
@@ -38,8 +39,9 @@ object WriteStrategies {
    * hot PK with millions of versions shuffles ~one row per input
    * partition instead of pinning a single sorted window partition. At
    * 100 TB this is the difference between a bounded merge and a straggler.
-   * Struct comparison is field-order lexicographic with nulls-first, so
-   * `max_by` matches the old window's `desc_nulls_last` ordering.
+   * Struct comparison is field-order lexicographic with nulls first, so a
+   * null order value loses to any non-null one. A frame with none of
+   * `orderCols` has no latest version and is rejected.
    */
   def dedupLatest(
       df: DataFrame,
@@ -47,7 +49,8 @@ object WriteStrategies {
       orderCols: Seq[String] = Seq(Records.ExtractedAtColumn, Records.RawIdColumn)): DataFrame = {
     require(pks.nonEmpty, "merge/dedup requires primary keys")
     val present = orderCols.filter(df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).contains(_))
-    if (present.isEmpty) return dedupLatestWindow(df, pks, orderCols)
+    require(present.nonEmpty, "dedupLatest needs an order column to pick the latest " +
+      s"version; none of ${orderCols.mkString(", ")} is in [${df.columns.mkString(", ")}]")
     df.groupBy(pks.map(col): _*)
       .agg(max_by(
         struct(df.columns.map(col).toSeq: _*),
@@ -55,124 +58,33 @@ object WriteStrategies {
       .select(col("__row.*"))
   }
 
-  /** Sort-window formulation of [[dedupLatest]] (kept for parity tests
-    * and for callers that need explicit null-ordering control). */
-  def dedupLatestWindow(
-      df: DataFrame,
-      pks: Seq[String],
-      orderCols: Seq[String] = Seq(Records.ExtractedAtColumn, Records.RawIdColumn)): DataFrame = {
-    require(pks.nonEmpty, "merge/dedup requires primary keys")
-    val present = orderCols.filter(df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).contains(_))
-    val w = Window.partitionBy(pks.map(col): _*)
-      .orderBy(present.map(c => col(c).desc_nulls_last): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  private val SkewProbeFraction = 0.05
+  private val SkewProbeMinRows = 1000L
+  private val SkewShare = 0.3
 
-  /**
-   * Skew-safe dedup: a hot PK with millions of versions would pin one
-   * window partition (the classic merge hotspot at scale). Two phases:
-   * a salted window keeps the latest per (pk, salt) — bounding any
-   * partition to rows/salt — then the plain window picks the latest of
-   * the ≤`salt` survivors per pk. Latest-of-latests ≡ latest, so the
-   * result is identical to `dedupLatest`; cost is one extra (cheap,
-   * post-pruned) shuffle, only worth paying for skewed inputs.
-   */
-  def dedupLatestSalted(
-      df: DataFrame, pks: Seq[String], salt: Int = 16,
-      orderCols: Seq[String] = Seq(Records.ExtractedAtColumn, Records.RawIdColumn)): DataFrame = {
-    require(pks.nonEmpty, "merge/dedup requires primary keys")
-    val present = orderCols.filter(df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).contains(_))
-    require(present.nonEmpty, "salted dedup requires at least one order column")
-    // The salt MUST be a deterministic function of row values, projected
-    // into a real column BEFORE the window: a nondeterministic expression
-    // (e.g. monotonically_increasing_id) inside a window sort key gets
-    // re-evaluated during sort comparisons — an inconsistent comparator
-    // ("Comparison method violates its general contract!") or silent
-    // misgrouping. The order columns are unique per row, so their hash
-    // spreads a hot key's versions evenly across salt groups.
-    val salted = df.withColumn("__salt", pmod(hash(present.map(col): _*), lit(salt)))
-    val w1 = Window.partitionBy((pks :+ "__salt").map(col): _*)
-      .orderBy(present.map(c => col(c).desc_nulls_last): _*)
-    val partial = salted.withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") === 1).drop("__rn", "__salt")
-    dedupLatest(partial, pks, orderCols)
-  }
-
-  /**
-   * Skew-aware dedup selection: a sampled PK histogram (one cheap probe
-   * job, fixed seed — deterministic) routes HOT-KEY inputs to
-   * [[dedupLatestSalted]] and everything else to the plain
-   * [[dedupLatest]] hash-agg. The hash-agg is already skew-immune for
-   * SHUFFLE purposes (partial aggregation collapses each mapper's keys
-   * before the exchange), but its aggregation buffer carries one full
-   * row struct per distinct key per mapper — under a hot key with wide
-   * rows and high update fan-in, the salted two-phase window bounds
-   * every sort partition to rows/salt instead. Both paths produce
-   * identical output (latest-of-latests ≡ latest; spec-pinned), so the
-   * probe is free to be heuristic:
-   *
-   *  - `graft.merge.skewProbeFraction` (default 0.05): sample fraction;
-   *  - `graft.merge.skewProbeMinRows` (default 1000): below this many
-   *    sampled rows skew cannot hurt — skip straight to the hash-agg;
-   *  - `graft.merge.saltSkewShare` (default 0.3): a single PK owning
-   *    more than this share of the sample selects the salted plan.
-   */
-  def dedupLatestAuto(
-      df: DataFrame, pks: Seq[String],
-      orderCols: Seq[String] = Seq(Records.ExtractedAtColumn, Records.RawIdColumn)): DataFrame =
-    dedupPick(df, pks, probeSkew(df, pks), orderCols)
-
-  /** The sampled skew probe factored out of [[dedupLatestAuto]] (round
-    * 17) so a caller that merges the same stream repeatedly in one
-    * session can run it once and reuse the DECISION — the probe is one
-    * full sampled scan of both merge sides per call, and both dedup
-    * plans it selects between produce identical output (spec-pinned),
-    * so the decision is free to be memoized. */
+  /** Sampled PK-skew probe: true when one key owns more than 30% of a
+    * 5% sample of at least 1000 rows. A diagnostic only: no write path
+    * calls it, because [[dedupLatest]]'s partial aggregate already
+    * collapses a hot key to one row per mapper before the shuffle. */
   def probeSkew(df: DataFrame, pks: Seq[String]): Boolean = {
     require(pks.nonEmpty, "merge/dedup requires primary keys")
-    val spark = df.sparkSession
-    def conf(k: String, d: Double): Double =
-      spark.conf.getOption(k).map(_.toDouble).getOrElse(d)
-    val fraction = conf("graft.merge.skewProbeFraction", 0.05)
-    val minRows = conf("graft.merge.skewProbeMinRows", 1000.0)
-    val shareThreshold = conf("graft.merge.saltSkewShare", 0.3)
-    val probe = df.sample(withReplacement = false, math.min(1.0, fraction), seed = 42L)
+    val probe = df.sample(withReplacement = false, SkewProbeFraction, seed = 42L)
       .groupBy(pks.map(col): _*).agg(count(lit(1)).as("__n"))
       .agg(coalesce(max(col("__n")), lit(0L)).as("mx"),
         coalesce(sum(col("__n")), lit(0L)).as("tot"))
       .collect()(0)
     val (mx, tot) = (probe.getLong(0), probe.getLong(1))
-    tot >= minRows && mx.toDouble / tot.toDouble > shareThreshold
+    tot >= SkewProbeMinRows && mx.toDouble / tot.toDouble > SkewShare
   }
 
-  /** Route a (possibly memoized) skew verdict to the physical dedup
-    * plan — the selection half of [[dedupLatestAuto]]. */
-  def dedupPick(
-      df: DataFrame, pks: Seq[String], skewed: Boolean,
-      orderCols: Seq[String] = Seq(Records.ExtractedAtColumn, Records.RawIdColumn)): DataFrame = {
-    require(pks.nonEmpty, "merge/dedup requires primary keys")
-    val present = orderCols.filter(df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).contains(_))
-    if (skewed && present.nonEmpty) dedupLatestSalted(df, pks, orderCols = orderCols)
-    else dedupLatest(df, pks, orderCols)
-  }
-
-  /** Merge incoming into existing: last-wins per PK, idempotent. The
-    * skew probe ([[dedupLatestAuto]]) picks the physical dedup plan;
-    * `skewHint` (round 17) lets a session that already probed this
-    * stream skip the probe scan — the hint only selects between two
-    * output-identical plans. */
-  def merge(existing: Option[DataFrame], incoming: DataFrame, pks: Seq[String],
-      skewHint: Option[Boolean] = None): DataFrame = {
+  /** Merge incoming into existing: last-wins per PK ([[dedupLatest]] of
+    * the union), idempotent. */
+  def merge(existing: Option[DataFrame], incoming: DataFrame, pks: Seq[String]): DataFrame = {
     val unioned = existing match {
       case Some(e) => e.unionByName(incoming, allowMissingColumns = true)
       case None    => incoming
     }
-    skewHint match {
-      case Some(s) => dedupPick(unioned, pks, s)
-      case None    => dedupLatestAuto(unioned, pks)
-    }
+    dedupLatest(unioned, pks)
   }
 
   /**

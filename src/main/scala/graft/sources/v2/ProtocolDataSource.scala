@@ -230,7 +230,8 @@ private[v2] class ProtocolReaderFactory(required: StructType, stream: String,
  * Streams one staged JSONL(.gz) file: parse the protocol envelope, keep
  * RECORDs of the target stream, convert the `data` payload to the
  * required (possibly pruned) schema. Conversion rules follow the type
- * system (SURVEY §1.3): missing → null, objects/arrays → canonical JSON
+ * system (SURVEY §1.3): missing or of the wrong JSON kind → null (as
+ * `from_json` on the `JsonlSource` path), objects/arrays → canonical JSON
  * text, unknown → string failover; field lookup is case-insensitive
  * (F9). Runs on executors — the driver only lists files.
  */
@@ -288,7 +289,11 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
       name: String): JsonNode =
     if (name.equalsIgnoreCase(ProtocolDataSource.ExtractedAt))
       mapper.getNodeFactory.numberNode(extractedAt)
-    else fieldNode(data, name)
+    else {
+      val n = fieldNode(data, name)
+      if (n == null || required.find(_.name == name).forall(f => accepts(n, f.dataType))) n
+      else null // reads as null, so IsNull must see null too
+    }
 
   private def fieldNode(data: JsonNode, name: String): JsonNode = {
     val exact = data.get(name)
@@ -301,6 +306,18 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
     null
   }
 
+  /** Whether `from_json` reads a node of this JSON kind as `dt`: numeric
+    * types take only in-range numbers and booleans only `true`/`false`,
+    * so `"12"`, `"abc"`, `1.5` (for a long) and `"yes"` are null. Other
+    * types take every kind; their parse decides. */
+  private def accepts(n: JsonNode, dt: DataType): Boolean = dt match {
+    case LongType => n.isIntegralNumber && n.canConvertToLong
+    case IntegerType => n.isIntegralNumber && n.canConvertToInt
+    case DoubleType => n.isNumber
+    case BooleanType => n.isBoolean
+    case _ => true
+  }
+
   private def convert(data: JsonNode, extractedAt: Long): InternalRow = {
     val values = new Array[Any](required.length)
     var i = 0
@@ -310,14 +327,14 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
         if (f.name == ProtocolDataSource.ExtractedAt) extractedAt
         else {
           val n = fieldNode(data, f.name)
-          if (n == null || n.isNull) null
+          if (n == null || n.isNull || !accepts(n, f.dataType)) null
           else f.dataType match {
             case StringType =>
               UTF8String.fromString(if (n.isValueNode) n.asText() else n.toString)
-            case LongType => java.lang.Long.valueOf(n.asLong())
-            case IntegerType => java.lang.Integer.valueOf(n.asInt())
-            case DoubleType => java.lang.Double.valueOf(n.asDouble())
-            case BooleanType => java.lang.Boolean.valueOf(n.asBoolean())
+            case LongType => java.lang.Long.valueOf(n.longValue())
+            case IntegerType => java.lang.Integer.valueOf(n.intValue())
+            case DoubleType => java.lang.Double.valueOf(n.doubleValue())
+            case BooleanType => java.lang.Boolean.valueOf(n.booleanValue())
             case d: DecimalType =>
               // NaN, ±Infinity and non-numeric text are null, as in from_json
               try org.apache.spark.sql.types.Decimal(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 
 import graft.operators.{Records, WriteStrategies}
 
-/** Driver-contract integrity + skew-path equivalence. */
+/** Driver-contract integrity + hot-key dedup. */
 class ContractSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -34,20 +34,22 @@ class ContractSpec extends SparkTestBase {
     }
   }
 
-  test("salted dedup is equivalent to plain dedup (incl. hot-key skew)") {
+  test("hot-key dedupLatest keeps each key's max raw id at one extracted_at") {
     // hot key 1 with 500 versions; a few cold keys
     val rows = (1 to 500).map(i => (1L, s"v$i", i.toDouble)) ++
       Seq((2L, "x", 1.0), (3L, "y", 2.0))
     // materialize once: uuid7 raw ids are nondeterministic per evaluation,
-    // and both paths must see the SAME ids for the tiebreak comparison
+    // and the dedup and the expected winners must see the SAME ids
     val df = Records.addMetadata(rows.toDF("id", "name", "score"),
       Some((lit("2020-01-01 00:00:00").cast(TimestampType))))
-      .localCheckpoint()
-    val plain = WriteStrategies.dedupLatest(df, Seq("id"))
-      .select("id", "name").as[(Long, String)].collect().toMap
-    val salted = WriteStrategies.dedupLatestSalted(df, Seq("id"), salt = 8)
-      .select("id", "name").as[(Long, String)].collect().toMap
-    assert(plain.keySet == Set(1L, 2L, 3L))
-    assert(salted == plain) // same extracted_at ⇒ winner decided by raw_id both paths
+      .repartition(4).localCheckpoint()
+    val all = df.select("id", "name", Records.RawIdColumn)
+      .as[(Long, String, String)].collect()
+    // every version shares extracted_at, so the winner is the max raw id
+    val expected = all.groupBy(_._1).map { case (id, vs) => id -> vs.maxBy(_._3)._2 }
+    val got = WriteStrategies.dedupLatest(df, Seq("id"))
+      .select("id", "name").as[(Long, String)].collect()
+    assert(got.length == 3)
+    assert(got.toMap == expected)
   }
 }

@@ -61,6 +61,22 @@ class MaintenanceSpec extends SparkTestBase {
     cache.dropAll()
   }
 
+  test("a swap whose second rename fails rolls the original table back") {
+    val cache = SparkCache.fresh(spark, "graft_test_swap_rollback")
+    val t = cache.tableName("orders_nopk")
+    CacheTables.save(Tables.orders(spark, "/root/testdata/sf0.001").limit(100).write, t)
+    // the staged table does not exist: the first rename (target → old)
+    // succeeds, the second (staged → target) fails
+    intercept[org.apache.spark.sql.AnalysisException](
+      cache.swap("__swap_new_missing", t, partitioned = false))
+    assert(cache.tableExists("orders_nopk"))
+    assert(spark.table(t).count() == 100)
+    val left = spark.sql("SHOW TABLES IN graft_test_swap_rollback")
+      .select("tableName").as[String].collect().filter(_.startsWith("__"))
+    assert(left.isEmpty, left.mkString(", "))
+    cache.dropAll()
+  }
+
   test("analyzeTable records CBO row counts and column stats in the catalog") {
     val cache = SparkCache.fresh(spark, "graft_test_analyze")
     val o = Tables.orders(spark, "/root/testdata/sf0.001")

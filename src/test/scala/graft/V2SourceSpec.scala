@@ -161,4 +161,47 @@ class V2SourceSpec extends SparkTestBase {
     assert(v2.map(_.isNullAt(2)) == Seq(true, true, true, false))
     assert(v2(0).getString(1) == "ann" && v2(2).getString(1) == "bo")
   }
+
+  test("a value of the wrong JSON kind reads null, as on the JsonlSource path") {
+    val dir = Files.createTempDirectory("graft-v2").toString
+    val lines = Seq(
+      """{"id":"12","name":"quoted int"}""",
+      """{"id":"abc","name":"text int"}""",
+      """{"id":3,"active":"yes"}""",
+      """{"id":4,"active":"true"}""",
+      """{"id":5,"active":1}""",
+      """{"id":6,"score":"2.5"}""",
+      """{"id":7,"score":"abc"}""",
+      """{"id":8.0,"name":"fractional int"}""",
+      """{"id":99999999999999999999,"name":"overflow"}""",
+      """{"id":10,"name":12,"score":true}""").zipWithIndex.map {
+      case (data, i) => rec("users", data, i + 1L)
+    }
+    writeLines(s"$dir/k1.jsonl", lines)
+    val declared = graft.protocol.ConfiguredCatalog.fromCatalogJson(catalogJson)("users").schema
+    def read(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("_airbyte_extracted_at").select("id", "name", "score", "active")
+        .collect().toSeq.map(_.toSeq)
+    val jsonl = graft.operators.Records.normalizeProtocol(
+      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING), "users", declared)
+    val v2 = spark.read.format(fmt)
+      .option("catalogJson", catalogJson).option("stream", "users")
+      .load(s"$dir/k1.jsonl")
+    // recorded from Records.normalizeProtocol (from_json) on these lines
+    val expected = Seq(
+      Seq(null, "quoted int", null, null),
+      Seq(null, "text int", null, null),
+      Seq(3L, null, null, null), // "yes"
+      Seq(4L, null, null, null), // "true"
+      Seq(5L, null, null, null), // 1
+      Seq(6L, null, new java.math.BigDecimal("2.500000000"), null), // quoted number
+      Seq(7L, null, null, null),
+      Seq(null, "fractional int", null, null),
+      Seq(null, "overflow", null, null),
+      Seq(10L, "12", null, null))
+    assert(read(jsonl) == expected)
+    assert(read(v2) == expected)
+    // the pushed IsNull sees the same nulls the rows carry
+    assert(v2.filter(col("id").isNull).count() == jsonl.filter(col("id").isNull).count())
+  }
 }

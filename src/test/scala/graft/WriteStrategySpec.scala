@@ -245,33 +245,63 @@ class WriteStrategySpec extends SparkTestBase {
     base.dropAll()
   }
 
-  test("skew probe: a hot-PK merge takes the salted plan, identical output") {
-    import graft.operators.{Records, WriteStrategies}
-    // 95% of rows share one PK — the hot-key regime; versions are
-    // distinguished by the standard order columns
-    def mk(rows: Seq[(Long, Int)]) = rows.toDF("id", "v")
-      .withColumn(Records.ExtractedAtColumn,
-        expr("timestamp_millis(1700000000000 + v)"))
-      .withColumn(Records.RawIdColumn, lpad(col("v").cast("string"), 8, "0"))
-    val hot = mk((1 to 2000).map(i => (if (i % 20 == 0) i.toLong else 7L, i)))
-    val uniform = mk((1 to 2000).map(i => ((i % 500).toLong, i)))
-    spark.conf.set("graft.merge.skewProbeFraction", "1.0")
-    spark.conf.set("graft.merge.skewProbeMinRows", "100")
-    try {
-      val hotPlan = WriteStrategies.dedupLatestAuto(hot, Seq("id"))
-      assert(hotPlan.queryExecution.analyzed.toString.contains("__salt"),
-        "hot-PK input must select the salted two-phase plan")
-      val uniPlan = WriteStrategies.dedupLatestAuto(uniform, Seq("id"))
-      assert(!uniPlan.queryExecution.analyzed.toString.contains("__salt"),
-        "uniform input must stay on the single-exchange hash-agg plan")
-      // identical output regardless of the physical plan chosen
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("id", "v").collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
-      assert(rows(hotPlan) == rows(WriteStrategies.dedupLatest(hot, Seq("id"))))
-      assert(rows(uniPlan) == rows(WriteStrategies.dedupLatest(uniform, Seq("id"))))
-    } finally {
-      spark.conf.unset("graft.merge.skewProbeFraction")
-      spark.conf.unset("graft.merge.skewProbeMinRows")
-    }
+  test("dedupLatest without an order column fails with the missing names") {
+    val e = intercept[IllegalArgumentException](
+      WriteStrategies.dedupLatest(spark.range(10).toDF(), Seq("id")))
+    assert(e.getMessage.contains(Records.ExtractedAtColumn) &&
+      e.getMessage.contains(Records.RawIdColumn), e.getMessage)
+  }
+
+  // ------------------------------------------------------------------
+  // Gate: one dedup plan and one rename swap. A second dedup plan, a
+  // plan-choice knob or a hand-rolled rename dance would fork the merge
+  // finalize again without any output-level test noticing.
+  // ------------------------------------------------------------------
+
+  private val forkNames = Seq("dedupLatestSalted", "dedupLatestAuto", "skewHint", "\"graft.merge.")
+
+  /** Forbidden merge-fork names in one file's text. */
+  private[graft] def forks(text: String): Seq[String] = forkNames.filter(text.contains)
+
+  /** Names of the 2-space-indented `def`s in `text` whose body holds a
+    * `RENAME TO` — a member runs from its `def` line to the next one's. */
+  private[graft] def renamers(text: String): Seq[String] = {
+    val member = """(?m)^  (?:private(?:\[\w+\])? |override |final )*def (\w+)""".r
+    val starts = member.findAllMatchIn(text).map(m => (m.start, m.group(1))).toSeq
+    val bodies = ((0, "") +: starts).zip(starts.map(_._1) :+ text.length)
+    bodies.collect { case ((from, name), to) if text.substring(from, to).contains("RENAME TO") => name }
+  }
+
+  test("source gate: one dedup plan and one rename swap in src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from repo root: $root")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally walk.close()
+    def read(p: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val offenders = files.flatMap(p => forks(read(p)).map(f => s"$p -> $f"))
+    assert(offenders.isEmpty, s"merge fork back in src/main:\n  ${offenders.mkString("\n  ")}")
+    val cache = read(root.resolve("graft/cache/SparkCache.scala"))
+    assert(renamers(cache) == Seq("swap"),
+      "SparkCache renames tables only in its one swap helper")
+  }
+
+  test("the gate's matchers catch a fork and a rename outside swap") {
+    assert(forks("WriteStrategies.dedupLatestSalted(df, pks)").nonEmpty)
+    assert(forks("merge(Some(e), b, pks, skewHint = Some(true))").nonEmpty)
+    assert(forks("spark.conf.get(\"graft.merge.saltSkewShare\")").nonEmpty)
+    assert(forks("WriteStrategies.dedupLatest(df, pks)").isEmpty)
+    val one = Seq(
+      "final class C {",
+      "  private[graft] def swap(a: String, b: String): Unit = {",
+      "    def repair(t: String): Unit = ()",
+      "    spark.sql(s\"ALTER TABLE $a RENAME TO $b\")",
+      "  }",
+      "  def other(): Unit = ()").mkString("\n")
+    assert(renamers(one) == Seq("swap"))
+    val two = one + "\n  private def stageAndSwap(): Unit =\n    spark.sql(\"ALTER TABLE x RENAME TO y\")"
+    assert(renamers(two) == Seq("swap", "stageAndSwap"))
+    assert(renamers("spark.sql(\"ALTER TABLE x RENAME TO y\")") == Seq(""))
   }
 }
