@@ -2,7 +2,7 @@ package graft.protocol
 
 import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonParser, JsonProcessingException, JsonToken}
 import com.fasterxml.jackson.core.json.JsonReadFeature
-import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.types.StructType
 
@@ -143,13 +143,6 @@ object RecordEnvelope {
   private val factory = new JsonFactoryBuilder()
     .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
     .build()
-
-  /** Parses a `data` slice of [[split]] with the splitter's features and
-    * the exact numbers of [[AirbyteMessage.mapper]], so every slice the
-    * splitter accepts also parses. */
-  val dataMapper: ObjectMapper = new ObjectMapper(factory)
-    .setNodeFactory(JsonNodeFactory.withExactBigDecimals(true))
-    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
 
   /**
    * Split one protocol line with Jackson streaming, in one pass and
@@ -365,6 +358,4 @@ object ConfiguredCatalog {
       }
     ConfiguredCatalog(streams)
   }
-
-  private def nodeToStream(s: JsonNode): Unit = ()
 }

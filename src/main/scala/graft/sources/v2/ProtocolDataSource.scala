@@ -3,18 +3,23 @@ package graft.sources.v2
 import java.util
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, StructFilters}
+import org.apache.spark.sql.catalyst.expressions.{And, BasePredicate, BoundReference, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.protocol.{ConfiguredCatalog, RecordEnvelope}
+import graft.protocol.{ConfiguredCatalog, ConfiguredStream, RecordEnvelope}
 
 /**
  * DataSourceV2 packaging of the connector-protocol scan (SURVEY §2.1 S1):
@@ -35,9 +40,16 @@ import graft.protocol.{ConfiguredCatalog, RecordEnvelope}
  *  - one InputPartition per staged file — the connector's batch-spill
  *    unit (S4, ~100k records/file) is the parallelism unit, so a sync's
  *    files fan out across executors;
+ *  - each `data` payload is converted by Spark's own JSON parser
+ *    (`JacksonParser`, the engine behind `from_json`), so this reader
+ *    and the `JsonlSource` path read a record alike; payload keys match
+ *    their declared wire names exactly;
  *  - column pruning is pushed INTO the reader
  *    (SupportsPushDownRequiredColumns): `select(one_col)` parses only
  *    that field from each record's JSON;
+ *  - filters on payload columns are pushed into the reader, which
+ *    drops a rejected record before it becomes a Spark row; every filter
+ *    is also kept as residual;
  *  - gzip (`.gz`) files stream-decode, matching the reference's
  *    JSONL.gz spill format.
  *
@@ -58,7 +70,11 @@ class ProtocolDataSource extends TableProvider {
 object ProtocolDataSource {
   val ExtractedAt = "_airbyte_extracted_at"
 
-  def schemaFor(options: CaseInsensitiveStringMap): StructType = {
+  def schemaFor(options: CaseInsensitiveStringMap): StructType =
+    StructType(streamFor(options).schema.fields :+ StructField(ExtractedAt, TimestampType))
+
+  /** The configured stream the `catalogJson` and `stream` options name. */
+  def streamFor(options: CaseInsensitiveStringMap): ConfiguredStream = {
     val catalogJson = Option(options.get("catalogJson")).getOrElse(
       throw new graft.errors.GraftInputError(
         "graft protocol source needs option 'catalogJson' (discover output)",
@@ -69,8 +85,7 @@ object ProtocolDataSource {
         "graft protocol source needs option 'stream'",
         guidance = Some("Pass .option(\"stream\", <stream name>) naming a " +
           "stream from the configured catalog.")))
-    val declared = ConfiguredCatalog.fromCatalogJson(catalogJson)(stream).schema
-    StructType(declared.fields :+ StructField(ExtractedAt, TimestampType))
+    ConfiguredCatalog.fromCatalogJson(catalogJson)(stream)
   }
 
   /** Staged files under the load path(s); deterministic order. */
@@ -120,89 +135,50 @@ private[v2] class ProtocolScanBuilder(full: StructType,
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
 
-  import org.apache.spark.sql.sources._
-
+  private val declared = ProtocolDataSource.streamFor(options)
+  private val sessionTz = SQLConf.get.sessionLocalTimeZone
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Comparison filters on scalar declared fields evaluate inside the
-    * reader, BEFORE a row is materialized — the scan-level analog of the
-    * reference's lazy filter chain (P4) and the incremental cursor
-    * filter (ST5: `cursor > saved_state` skips already-synced records
-    * at parse time). All filters are also returned as residual, so
-    * Spark re-checks them — pushdown here is a row-materialization
-    * saving, never a correctness dependency. */
+  /** `required` without `_airbyte_extracted_at`, under the payload's
+    * wire names: the schema the JSON parser reads `data` with. A column
+    * the catalog does not declare keeps its own name. */
+  private def wireRequired: StructType = {
+    val wire = declared.schema.fieldNames.zip(declared.parseSchema.fieldNames).toMap
+    StructType(required.filterNot(_.name == ProtocolDataSource.ExtractedAt)
+      .map(f => f.copy(name = wire.getOrElse(f.name, f.name))))
+  }
+
+  /** Filters on payload columns are evaluated in the reader on each
+    * converted row, so a rejected record never reaches Spark — the
+    * scan-level analog of the reference's lazy filter chain (P4) and the
+    * incremental cursor filter (ST5). Every filter is also returned as
+    * residual and Spark re-checks it: pushdown here saves row
+    * materialization and is never a correctness dependency. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(FilterEval.supported(full, _))
-    filters // residual: Spark re-evaluates everything post-scan
+    pushed = StructFilters.pushedFilters(filters, wireRequired)
+    filters
   }
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new ProtocolScan(required, options.get("stream"),
-      ProtocolDataSource.listFiles(options), pushed,
+    new ProtocolScan(required, wireRequired, options.get("stream"),
+      ProtocolDataSource.listFiles(options), pushed, sessionTz,
       nowMicros = System.currentTimeMillis() * 1000L)
-}
-
-/** Evaluate pushed comparison filters against the parsed JSON payload. */
-private[v2] object FilterEval {
-  import org.apache.spark.sql.sources._
-
-  def supported(schema: StructType, f: Filter): Boolean = f match {
-    case EqualTo(a, _) => scalar(schema, a)
-    case GreaterThan(a, _) => scalar(schema, a)
-    case GreaterThanOrEqual(a, _) => scalar(schema, a)
-    case LessThan(a, _) => scalar(schema, a)
-    case LessThanOrEqual(a, _) => scalar(schema, a)
-    case IsNotNull(a) => schema.fieldNames.contains(a)
-    case IsNull(a) => schema.fieldNames.contains(a)
-    case _ => false
-  }
-
-  private def scalar(schema: StructType, name: String): Boolean =
-    schema.fields.find(_.name == name).exists(_.dataType match {
-      case LongType | IntegerType | DoubleType | StringType | BooleanType => true
-      case _ => false
-    })
-
-  /** null-safe comparison semantics: a null field fails every
-    * comparison filter (matching SQL) except IsNull. */
-  def eval(f: Filter, field: String => JsonNode): Boolean = f match {
-    case EqualTo(a, v) => cmp(field(a), v).contains(0)
-    case GreaterThan(a, v) => cmp(field(a), v).exists(_ > 0)
-    case GreaterThanOrEqual(a, v) => cmp(field(a), v).exists(_ >= 0)
-    case LessThan(a, v) => cmp(field(a), v).exists(_ < 0)
-    case LessThanOrEqual(a, v) => cmp(field(a), v).exists(_ <= 0)
-    case IsNotNull(a) => { val n = field(a); n != null && !n.isNull }
-    case IsNull(a) => { val n = field(a); n == null || n.isNull }
-    case _ => true
-  }
-
-  private def cmp(n: JsonNode, v: Any): Option[Int] = {
-    if (n == null || n.isNull) return None
-    v match {
-      case l: java.lang.Long => Some(java.lang.Long.compare(n.asLong(), l))
-      case i: java.lang.Integer => Some(java.lang.Long.compare(n.asLong(), i.longValue()))
-      case d: java.lang.Double => Some(java.lang.Double.compare(n.asDouble(), d))
-      case s: String => Some(n.asText().compareTo(s))
-      case b: java.lang.Boolean => Some(java.lang.Boolean.compare(n.asBoolean(), b))
-      case _ => None
-    }
-  }
 }
 
 private[v2] case class ProtocolFilePartition(file: String) extends InputPartition
 
 /** `nowMicros` stamps the records whose `emitted_at` is absent or not a
   * whole number, one instant per scan, like `current_timestamp()` per
-  * query on the `JsonlSource` path. */
-private[v2] class ProtocolScan(required: StructType, stream: String,
-    files: Seq[String],
-    pushed: Array[org.apache.spark.sql.sources.Filter],
-    nowMicros: Long) extends Scan with Batch {
+  * query on the `JsonlSource` path. `sessionTz` reads zoneless
+  * timestamps, as `from_json` does under the session's time zone. */
+private[v2] class ProtocolScan(required: StructType, wireRequired: StructType,
+    stream: String, files: Seq[String], pushed: Array[Filter],
+    sessionTz: String, nowMicros: Long) extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -215,34 +191,52 @@ private[v2] class ProtocolScan(required: StructType, stream: String,
     files.map(ProtocolFilePartition.apply).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ProtocolReaderFactory(required, stream, pushed, nowMicros)
+    new ProtocolReaderFactory(required, wireRequired, stream, pushed, sessionTz, nowMicros)
 }
 
-private[v2] class ProtocolReaderFactory(required: StructType, stream: String,
-    pushed: Array[org.apache.spark.sql.sources.Filter], nowMicros: Long)
-    extends PartitionReaderFactory {
+private[v2] class ProtocolReaderFactory(required: StructType,
+    wireRequired: StructType, stream: String, pushed: Array[Filter],
+    sessionTz: String, nowMicros: Long) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ProtocolFileReader(partition.asInstanceOf[ProtocolFilePartition].file,
-      required, stream, pushed, nowMicros)
+      required, wireRequired, stream, pushed, sessionTz, nowMicros)
 }
 
 /**
- * Streams one staged JSONL(.gz) file: parse the protocol envelope, keep
- * RECORDs of the target stream, convert the `data` payload to the
- * required (possibly pruned) schema. Conversion rules follow the type
- * system (SURVEY §1.3): missing or of the wrong JSON kind → null (as
- * `from_json` on the `JsonlSource` path), objects/arrays → canonical JSON
- * text, unknown → string failover; field lookup is case-insensitive
- * (F9). Runs on executors — the driver only lists files.
+ * Streams one staged JSONL(.gz) file: split the protocol envelope, keep
+ * RECORDs of the target stream, and parse the `data` slice with the
+ * objects `from_json` builds — Spark's `JacksonParser` over the
+ * required (possibly pruned) wire-name schema, in PERMISSIVE mode — so
+ * both readers convert a payload by one rule (SURVEY §1.3): a missing
+ * field or a value of the wrong JSON kind is null, and the row is kept.
+ * Keys match their declared wire names exactly, as in `from_json`.
+ * `_airbyte_extracted_at` comes from the envelope, never the payload.
+ * Runs on executors — the driver only lists files.
  */
 private[v2] class ProtocolFileReader(file: String, required: StructType,
-    stream: String,
-    pushed: Array[org.apache.spark.sql.sources.Filter],
-    nowMicros: Long)
+    wireRequired: StructType, stream: String, pushed: Array[Filter],
+    sessionTz: String, nowMicros: Long)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = RecordEnvelope.dataMapper
-  private val noData = mapper.createObjectNode()
+  private val parser = {
+    val options = new JSONOptions(Map.empty[String, String], sessionTz, "_corrupt_record")
+    val jackson = new JacksonParser(wireRequired, options, allowArrayAsStructs = false)
+    new FailureSafeParser[String](
+      jackson.parse(_, CreateJacksonParser.string, UTF8String.fromString),
+      PermissiveMode, wireRequired, "_corrupt_record")
+  }
+
+  /** The pushed filters as one predicate over a converted row, through
+    * Spark's own filter translation. It runs after conversion, not
+    * inside the parse (`JsonFilters`), because the parse decides a
+    * filter on the first of duplicate keys while the row keeps the last. */
+  private val keep: BasePredicate = {
+    val ref = (name: String) => Some(wireRequired.fieldNames.indexOf(name)).filter(_ >= 0)
+      .map(i => BoundReference(i, wireRequired(i).dataType, nullable = true))
+    Predicate.create(pushed.flatMap(StructFilters.filterToExpression(_, ref))
+      .reduceOption[Expression](And).getOrElse(Literal.TrueLiteral))
+  }
+  private val extractedAtIndex = required.fieldNames.indexOf(ProtocolDataSource.ExtractedAt)
   private val reader = {
     val hp = new Path(file)
     val fs = FileSystem.get(hp.toUri, new Configuration())
@@ -255,17 +249,17 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
 
   /** One envelope split and one parse of the exact `data` slice per
     * line ([[RecordEnvelope.split]], as `JsonlSource` reads). A missing
-    * or non-object `data` gives a row of nulls, and an absent, quoted or
-    * fractional `emitted_at` gives the scan's now(). */
+    * or non-object `data` gives a row of nulls, an absent, quoted or
+    * fractional `emitted_at` gives the scan's now(), and a row the
+    * pushed filters reject is skipped. */
   override def next(): Boolean = {
     var line = reader.readLine()
     while (line != null) {
       RecordEnvelope.split(line) match {
         case Some(r) if r.stream.equalsIgnoreCase(stream) =>
-          val data = if (r.data == null) noData else mapper.readTree(r.data)
-          val extractedAt = r.emittedAt.fold(nowMicros)(_ * 1000L) // millis → micros
-          if (pushed.forall(FilterEval.eval(_, filterNode(data, extractedAt, _)))) {
-            row = convert(data, extractedAt)
+          val kept = parser.parse(if (r.data == null) "{}" else r.data).find(keep.eval)
+          if (kept.isDefined) {
+            row = withExtractedAt(kept.get, r.emittedAt.fold(nowMicros)(_ * 1000L))
             return true
           }
         case _ => ()
@@ -278,79 +272,10 @@ private[v2] class ProtocolFileReader(file: String, required: StructType,
   override def get(): InternalRow = row
   override def close(): Unit = reader.close()
 
-  /** Field resolver for pushed-filter evaluation. `_airbyte_extracted_at`
-    * is NOT in the data payload — it comes from the protocol envelope's
-    * `emitted_at` — so it must be resolved there, or Spark's auto-inferred
-    * `IsNotNull(_airbyte_extracted_at)` would evaluate false for every
-    * record and the reader would drop all rows. Comparisons on it are
-    * never pushed (TimestampType is outside FilterEval.scalar), so a
-    * numeric stand-in node is only ever null-checked. */
-  private def filterNode(data: JsonNode, extractedAt: Long,
-      name: String): JsonNode =
-    if (name.equalsIgnoreCase(ProtocolDataSource.ExtractedAt))
-      mapper.getNodeFactory.numberNode(extractedAt)
-    else {
-      val n = fieldNode(data, name)
-      if (n == null || required.find(_.name == name).forall(f => accepts(n, f.dataType))) n
-      else null // reads as null, so IsNull must see null too
-    }
-
-  private def fieldNode(data: JsonNode, name: String): JsonNode = {
-    val exact = data.get(name)
-    if (exact != null) return exact
-    val it = data.fieldNames()
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.equalsIgnoreCase(name)) return data.get(f)
-    }
-    null
-  }
-
-  /** Whether `from_json` reads a node of this JSON kind as `dt`: numeric
-    * types take only in-range numbers and booleans only `true`/`false`,
-    * so `"12"`, `"abc"`, `1.5` (for a long) and `"yes"` are null. Other
-    * types take every kind; their parse decides. */
-  private def accepts(n: JsonNode, dt: DataType): Boolean = dt match {
-    case LongType => n.isIntegralNumber && n.canConvertToLong
-    case IntegerType => n.isIntegralNumber && n.canConvertToInt
-    case DoubleType => n.isNumber
-    case BooleanType => n.isBoolean
-    case _ => true
-  }
-
-  private def convert(data: JsonNode, extractedAt: Long): InternalRow = {
-    val values = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val f = required(i)
-      values(i) =
-        if (f.name == ProtocolDataSource.ExtractedAt) extractedAt
-        else {
-          val n = fieldNode(data, f.name)
-          if (n == null || n.isNull || !accepts(n, f.dataType)) null
-          else f.dataType match {
-            case StringType =>
-              UTF8String.fromString(if (n.isValueNode) n.asText() else n.toString)
-            case LongType => java.lang.Long.valueOf(n.longValue())
-            case IntegerType => java.lang.Integer.valueOf(n.intValue())
-            case DoubleType => java.lang.Double.valueOf(n.doubleValue())
-            case BooleanType => java.lang.Boolean.valueOf(n.booleanValue())
-            case d: DecimalType =>
-              // NaN, ±Infinity and non-numeric text are null, as in from_json
-              try org.apache.spark.sql.types.Decimal(
-                new java.math.BigDecimal(n.asText()), d.precision, d.scale)
-              catch { case _: NumberFormatException => null }
-            case DateType =>
-              java.lang.Integer.valueOf(
-                java.time.LocalDate.parse(n.asText()).toEpochDay.toInt)
-            case TimestampType =>
-              java.lang.Long.valueOf(java.time.Instant.parse(n.asText())
-                .toEpochMilli * 1000L)
-            case _ => UTF8String.fromString(n.toString) // failover (§1.3)
-          }
-        }
-      i += 1
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
+  /** The parsed payload columns with `extractedAt` (micros) inserted at
+    * `_airbyte_extracted_at`'s position in `required`. */
+  private def withExtractedAt(parsed: InternalRow, extractedAt: Long): InternalRow =
+    if (extractedAtIndex < 0) parsed
+    else InternalRow.fromSeq(
+      parsed.toSeq(wireRequired).patch(extractedAtIndex, Seq(extractedAt), 0))
 }

@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.time.{Instant, LocalDate}
 import java.util.zip.GZIPOutputStream
 
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Records
+import graft.protocol.ConfiguredCatalog
 
 /** DataSourceV2 protocol source: declared schema, null-fill/prune,
   * pruned JSON parsing, per-file partitions, gzip spill files. */
@@ -35,7 +40,7 @@ class V2SourceSpec extends SparkTestBase {
   test("declared schema drives projection: null-fill, prune, types, metadata ts") {
     val dir = Files.createTempDirectory("graft-v2").toString
     writeLines(s"$dir/b1.jsonl", Seq(
-      rec("users", """{"id":1,"NAME":"ann","score":1.5,"active":true,"tags":[1,2]}""", 1700000000000L),
+      rec("users", """{"id":1,"name":"ann","score":1.5,"active":true,"tags":[1,2]}""", 1700000000000L),
       rec("users", """{"id":2,"extra_col":"dropped"}""", 1700000001000L),
       rec("other", """{"id":99}""", 1700000002000L), // different stream
       """{"type":"STATE","state":{"type":"STREAM"}}""",
@@ -47,7 +52,7 @@ class V2SourceSpec extends SparkTestBase {
       Seq("id", "name", "score", "active", "tags", "_airbyte_extracted_at"))
     val rows = df.orderBy("id").collect()
     assert(rows.length == 2)
-    // case-insensitive field pickup (NAME → name), array → JSON text
+    // declared field pickup, untyped array → JSON text
     assert(rows(0).getAs[String]("name") == "ann")
     assert(rows(0).getAs[String]("tags") == "[1,2]")
     assert(rows(0).getAs[Boolean]("active"))
@@ -111,97 +116,159 @@ class V2SourceSpec extends SparkTestBase {
     assert(df.filter(col("_airbyte_extracted_at").isNull).count() == 0)
   }
 
-  test("emitted_at parity with JsonlSource: quoted and fractional give now()") {
-    val dir = Files.createTempDirectory("graft-v2").toString
-    val lines = Seq(
-      rec("users", """{"id":1}""", 1700000000000L),
+  /** The parity table's catalog: the shared columns, with `tags` a typed
+    * array, plus a date, a date-time and a wire name that normalizes to
+    * another column name (`Joined At` → `joined_at`). */
+  private val parityCatalog =
+    """{"streams":[
+      |  {"name":"Users","json_schema":{"properties":{
+      |     "id":{"type":"integer"},"name":{"type":"string"},
+      |     "score":{"type":"number"},"active":{"type":"boolean"},
+      |     "tags":{"type":"array","items":{"type":"integer"}},
+      |     "d":{"type":"string","format":"date"},
+      |     "ts":{"type":"string","format":"date-time"},
+      |     "Joined At":{"type":"string"}}},
+      |   "source_defined_primary_key":[["id"]]}
+      |]}""".stripMargin
+
+  private val parityCols =
+    Seq("id", "name", "score", "active", "tags", "d", "ts", "joined_at", "_airbyte_extracted_at")
+
+  /** The scan's own now(), which both readers stamp as
+    * `_airbyte_extracted_at` when `emitted_at` is absent or not whole. */
+  private case object Now
+
+  /** One protocol line, the session time zone it is read under, and the
+    * row both readers must give for it: a column absent from `row` is
+    * null. */
+  private case class Parity(name: String, line: String, row: Map[String, Any],
+      tz: String = "UTC")
+
+  private val emittedAt = 1700000000000L
+
+  /** A case whose line carries `payload` as `data`, emitted at `emittedAt`. */
+  private def data(name: String, payload: String, row: (String, Any)*): Parity =
+    Parity(name, rec("users", payload, emittedAt),
+      row.toMap + ("_airbyte_extracted_at" -> Instant.ofEpochMilli(emittedAt)))
+
+  private def dec(s: String) = new java.math.BigDecimal(s)
+
+  /** Values of a wrong JSON kind, recorded from `Records.normalizeProtocol`
+    * (`from_json`); the pushdown test reads these lines too. */
+  private val wrongKind = Seq(
+    data("a quoted int is null", """{"id":"12","name":"quoted int"}""", "name" -> "quoted int"),
+    data("a text int is null", """{"id":"abc","name":"text int"}""", "name" -> "text int"),
+    data("a text boolean is null", """{"id":3,"active":"yes"}""", "id" -> 3L),
+    data("a quoted boolean is null", """{"id":4,"active":"true"}""", "id" -> 4L),
+    data("a numeric boolean is null", """{"id":5,"active":1}""", "id" -> 5L),
+    data("a quoted number reads as a decimal", """{"id":6,"score":"2.5"}""",
+      "id" -> 6L, "score" -> dec("2.500000000")),
+    data("a text decimal is null", """{"id":7,"score":"abc"}""", "id" -> 7L),
+    data("a fractional int is null", """{"id":8.0,"name":"fractional int"}""",
+      "name" -> "fractional int"),
+    data("an overflowing int is null", """{"id":99999999999999999999,"name":"overflow"}""",
+      "name" -> "overflow"),
+    data("a number reads as string text; a boolean decimal is null",
+      """{"id":10,"name":12,"score":true}""", "id" -> 10L, "name" -> "12"))
+
+  private val parity: Seq[Parity] = Seq(
+    Parity("a quoted emitted_at gives now()",
       """{"type":"RECORD","record":{"stream":"users","data":{"id":2},"emitted_at":"1700000000000"}}""",
+      Map("id" -> 2L, "_airbyte_extracted_at" -> Now)),
+    Parity("a fractional emitted_at gives now()",
       """{"type":"RECORD","record":{"stream":"users","data":{"id":3},"emitted_at":1.7E12}}""",
+      Map("id" -> 3L, "_airbyte_extracted_at" -> Now)),
+    Parity("an absent emitted_at gives now()",
       """{"type":"RECORD","record":{"stream":"users","data":{"id":4}}}""",
-      """{"type":"RECORD","record":{"stream":"users","data":[4,5],"emitted_at":5}}""")
-    writeLines(s"$dir/t1.jsonl", lines)
-    val declared = graft.protocol.ConfiguredCatalog.fromCatalogJson(catalogJson)("users").schema
-    val t0 = System.currentTimeMillis()
-    def read(df: org.apache.spark.sql.DataFrame): Seq[(Any, Long)] =
-      df.select("id", "_airbyte_extracted_at").collect().toSeq.map(r =>
-        (r.get(0), r.getTimestamp(1).getTime)).sortBy(_._2)
-    val v2 = read(spark.read.format(fmt)
-      .option("catalogJson", catalogJson).option("stream", "users")
-      .load(s"$dir/t1.jsonl"))
-    val jsonl = read(graft.operators.Records.normalizeProtocol(
-      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING), "users", declared))
-    val t1 = System.currentTimeMillis()
-    for (got <- Seq(v2, jsonl)) {
-      // a non-object data is a row of nulls with its own emitted_at
-      assert(got.take(2) == Seq((null, 5L), (1L, 1700000000000L)), got)
-      assert(got.drop(2).map(_._1).toSet == Set(2L, 3L, 4L), got)
-      assert(got.drop(2).forall { case (_, at) => at >= t0 && at <= t1 }, got)
+      Map("id" -> 4L, "_airbyte_extracted_at" -> Now)),
+    Parity("a non-object data is a row of nulls with its own emitted_at",
+      """{"type":"RECORD","record":{"stream":"users","data":[4,5],"emitted_at":5}}""",
+      Map("_airbyte_extracted_at" -> Instant.ofEpochMilli(5L))),
+    data("single-quoted keys and strings", """{'id':1,'name':'ann'}""",
+      "id" -> 1L, "name" -> "ann"),
+    data("NaN is a null decimal", """{"id":2,"score":NaN}""", "id" -> 2L),
+    data("-Infinity is a null decimal", """{"id":3,"name":'bo',"score":-Infinity}""",
+      "id" -> 3L, "name" -> "bo"),
+    data("a finite number is a DECIMAL(38,9)", """{"id":4,"score":2.5}""",
+      "id" -> 4L, "score" -> dec("2.500000000")),
+    data("a key matches its declared name exactly", """{"id":1,"NAME":"ann"}""", "id" -> 1L),
+    data("the last of duplicate keys wins", """{"id":1,"id":9}""", "id" -> 9L),
+    data("a key matches its wire name and reads as the normalized column",
+      """{"Joined At":"2024"}""", "joined_at" -> "2024"),
+    data("a nested object reads as its JSON text", """{"id":1,"name":{"a":[1,2]}}""",
+      "id" -> 1L, "name" -> """{"a":[1,2]}"""),
+    data("a typed array", """{"tags":[1,2]}""", "tags" -> Seq(1L, 2L)),
+    data("a date", """{"d":"2024-01-02"}""", "d" -> LocalDate.parse("2024-01-02")),
+    data("a malformed date is null", """{"d":"not a date"}"""),
+    data("a malformed date-time is null", """{"ts":"yesterday"}"""),
+    data("a date-time keeps its microseconds", """{"ts":"2024-01-02T03:04:05.123456Z"}""",
+      "ts" -> Instant.parse("2024-01-02T03:04:05.123456Z")),
+    data("a zoneless date-time reads in the session time zone",
+      """{"ts":"2024-01-02T03:04:05"}""", "ts" -> Instant.parse("2024-01-02T11:04:05Z"))
+      .copy(tz = "America/Los_Angeles")
+  ) ++ wrongKind
+
+  /** `lines` through both readers with the parity catalog:
+    * `Records.normalizeProtocol` (the `JsonlSource` path) and the v2 scan. */
+  private def readBoth(lines: Seq[String]): Seq[DataFrame] = {
+    val dir = Files.createTempDirectory("graft-v2").toString
+    writeLines(s"$dir/p.jsonl", lines)
+    val declared = ConfiguredCatalog.fromCatalogJson(parityCatalog)("users").parseSchema
+    Seq(
+      Records.normalizeProtocol(spark.createDataset(lines)(Encoders.STRING), "users", declared),
+      spark.read.format(fmt).option("catalogJson", parityCatalog).option("stream", "users")
+        .load(s"$dir/p.jsonl"))
+  }
+
+  private def withSessionTz[T](tz: String)(body: => T): T = {
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, tz)
+    try body finally spark.conf.set(key, saved)
+  }
+
+  parity.foreach { c =>
+    test(s"both readers: ${c.name}") {
+      withSessionTz(c.tz) {
+        val t0 = System.currentTimeMillis()
+        val read = readBoth(Seq(c.line)).map(_.select(parityCols.map(col): _*).collect())
+        val t1 = System.currentTimeMillis()
+        def value(v: Any): Any = v match {
+          case t: java.sql.Timestamp =>
+            if (t.getTime >= t0 && t.getTime <= t1) Now else t.toInstant
+          case d: java.sql.Date => d.toLocalDate
+          case v => v
+        }
+        val expected = Seq(parityCols.map(c.row.getOrElse(_, null)))
+        for (rows <- read) assert(rows.toSeq.map(_.toSeq.map(value)) == expected)
+      }
     }
   }
 
-  test("single-quoted and NaN data read as on the JsonlSource path") {
-    val dir = Files.createTempDirectory("graft-v2").toString
-    val lines = Seq(
-      rec("users", """{'id':1,'name':'ann'}""", 1L),
-      rec("users", """{"id":2,"score":NaN}""", 2L),
-      rec("users", """{"id":3,"name":'bo',"score":-Infinity}""", 3L),
-      rec("users", """{"id":4,"score":2.5}""", 4L))
-    writeLines(s"$dir/q1.jsonl", lines)
-    val declared = graft.protocol.ConfiguredCatalog.fromCatalogJson(catalogJson)("users").schema
-    def read(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "name", "score").orderBy("id").collect().toSeq
-    val jsonl = read(graft.operators.Records.normalizeProtocol(
-      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING), "users", declared))
-    val v2 = read(spark.read.format(fmt)
-      .option("catalogJson", catalogJson).option("stream", "users")
-      .load(s"$dir/q1.jsonl"))
-    assert(v2.map(_.getLong(0)) == Seq(1L, 2L, 3L, 4L), v2)
-    assert(v2 == jsonl)
-    // score is DECIMAL(38,9): a non-finite number is null, the row stays
-    assert(v2.map(_.isNullAt(2)) == Seq(true, true, true, false))
-    assert(v2(0).getString(1) == "ann" && v2(2).getString(1) == "bo")
-  }
+  private def scanLine(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString
+      .linesIterator.find(_.contains("graft protocol scan")).getOrElse("")
 
   test("a value of the wrong JSON kind reads null, as on the JsonlSource path") {
-    val dir = Files.createTempDirectory("graft-v2").toString
-    val lines = Seq(
-      """{"id":"12","name":"quoted int"}""",
-      """{"id":"abc","name":"text int"}""",
-      """{"id":3,"active":"yes"}""",
-      """{"id":4,"active":"true"}""",
-      """{"id":5,"active":1}""",
-      """{"id":6,"score":"2.5"}""",
-      """{"id":7,"score":"abc"}""",
-      """{"id":8.0,"name":"fractional int"}""",
-      """{"id":99999999999999999999,"name":"overflow"}""",
-      """{"id":10,"name":12,"score":true}""").zipWithIndex.map {
-      case (data, i) => rec("users", data, i + 1L)
+    // the filters the v2 reader drops rows with see the nulls the rows carry
+    val Seq(jsonl, v2) = readBoth(wrongKind.map(_.line))
+    for (f <- Seq(col("id") > 7, col("id").isNull, col("id").isin(3, 12)))
+      assert(v2.filter(f).count() == jsonl.filter(f).count(), f)
+    assert(v2.filter(col("id") > 7).count() == 1)
+    assert(v2.filter(col("id").isNull).count() == 4)
+    assert(v2.filter(col("id").isin(3, 12)).count() == 1)
+    for ((f, shown) <- Seq((col("id") > 7, "GreaterThan(id,7)"), (col("id").isin(3, 12), "In(id,"))) {
+      val line = scanLine(v2.filter(f))
+      assert(line.contains("pushedFilters=[") && line.contains(shown), line)
     }
-    writeLines(s"$dir/k1.jsonl", lines)
-    val declared = graft.protocol.ConfiguredCatalog.fromCatalogJson(catalogJson)("users").schema
-    def read(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("_airbyte_extracted_at").select("id", "name", "score", "active")
-        .collect().toSeq.map(_.toSeq)
-    val jsonl = graft.operators.Records.normalizeProtocol(
-      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING), "users", declared)
-    val v2 = spark.read.format(fmt)
-      .option("catalogJson", catalogJson).option("stream", "users")
-      .load(s"$dir/k1.jsonl")
-    // recorded from Records.normalizeProtocol (from_json) on these lines
-    val expected = Seq(
-      Seq(null, "quoted int", null, null),
-      Seq(null, "text int", null, null),
-      Seq(3L, null, null, null), // "yes"
-      Seq(4L, null, null, null), // "true"
-      Seq(5L, null, null, null), // 1
-      Seq(6L, null, new java.math.BigDecimal("2.500000000"), null), // quoted number
-      Seq(7L, null, null, null),
-      Seq(null, "fractional int", null, null),
-      Seq(null, "overflow", null, null),
-      Seq(10L, "12", null, null))
-    assert(read(jsonl) == expected)
-    assert(read(v2) == expected)
-    // the pushed IsNull sees the same nulls the rows carry
-    assert(v2.filter(col("id").isNull).count() == jsonl.filter(col("id").isNull).count())
+  }
+
+  test("a pushed filter sees the last of duplicate keys, as on the JsonlSource path") {
+    val Seq(jsonl, v2) = readBoth(Seq(
+      rec("users", """{"id":1,"id":9}""", 1L), rec("users", """{"id":9,"id":1}""", 2L)))
+    for (f <- Seq(col("id") > 7, col("id") < 5)) {
+      val ids = Seq(jsonl, v2).map(_.filter(f).select("id").collect().map(_.getLong(0)).toSeq)
+      assert(ids.distinct.size == 1 && ids.head.size == 1, s"$f: $ids")
+    }
   }
 }
