@@ -82,18 +82,25 @@ object Bpe {
    * Learn `k` merges from a text column. Returns one row per merge:
    * (step, left, right, merged, pair_cnt), step = 1..k in learning order.
    * Byte-identical to the sequential one-merge-per-job algorithm (see
-   * the batching proof in the object Scaladoc); `graft.bpe.window`
-   * caps the candidate window per round (1 = sequential).
+   * the batching proof in the object Scaladoc); each round fetches a
+   * candidate window of up to 256 pairs.
    */
   def learnMerges(df: DataFrame, textCol: String, k: Int): DataFrame =
     learnMergesWithRounds(df, textCol, k)._1
 
+  private val Window = 256
+
   /** learnMerges plus the number of distributed rounds it took — the
     * scale metric the batching exists for (rounds << k). */
-  def learnMergesWithRounds(df: DataFrame, textCol: String, k: Int): (DataFrame, Int) = {
+  def learnMergesWithRounds(df: DataFrame, textCol: String, k: Int): (DataFrame, Int) =
+    learnMergesWithRounds(df, textCol, k, Window)
+
+  /** `window` caps the candidate window per round (1 = the sequential
+    * one-merge-per-job algorithm, which tests compare against). */
+  private[graft] def learnMergesWithRounds(df: DataFrame, textCol: String, k: Int,
+      window: Int): (DataFrame, Int) = {
     val spark = df.sparkSession
     import spark.implicits._
-    val window = spark.conf.getOption("graft.bpe.window").map(_.toInt).getOrElse(256)
 
     // corpus → word vocabulary with counts; words split to char symbols.
     var vocab: DataFrame = df

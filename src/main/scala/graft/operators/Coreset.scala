@@ -58,14 +58,6 @@ object Coreset {
     s
   }
 
-  /**
-   * Select `k` centers. Returns (round, center_id, sel_dist2) — the
-   * squared distance to the chosen set at selection time (round 1 =
-   * the seed, distance 0). max(sel_dist2) over the result is the
-   * standard k-center coverage-radius² certificate.
-   * `graft.coreset.batch` caps the per-round candidate fetch (1 =
-   * the sequential one-pick-per-job algorithm).
-   */
   /** One round's bounded fetch over the (id, v, mind) state — a
     * TakeOrdered (per-partition heaps), ZERO shuffle exchanges.
     * Package-visible so the loop-iteration plan gate
@@ -75,18 +67,32 @@ object Coreset {
       .limit(batchSize + 1)
       .select(col("id"), col("v"), col("mind"))
 
+  /**
+   * Select `k` centers. Returns (round, center_id, sel_dist2) — the
+   * squared distance to the chosen set at selection time (round 1 =
+   * the seed, distance 0). max(sel_dist2) over the result is the
+   * standard k-center coverage-radius² certificate. Each round
+   * fetches up to 64 candidates.
+   */
   def kCenterGreedy(df: DataFrame, idCol: String, vecCol: String,
       k: Int, seedId: Long): DataFrame =
     kCenterGreedyWithRounds(df, idCol, vecCol, k, seedId)._1
 
+  private val Batch = 64
+
   /** kCenterGreedy plus the distributed round count (rounds << k is
     * the point of the batching). */
   def kCenterGreedyWithRounds(df: DataFrame, idCol: String, vecCol: String,
-      k: Int, seedId: Long): (DataFrame, Int) = {
+      k: Int, seedId: Long): (DataFrame, Int) =
+    kCenterGreedyWithRounds(df, idCol, vecCol, k, seedId, Batch)
+
+  /** `batchSize` caps the per-round candidate fetch (1 = the
+    * sequential one-pick-per-job algorithm, which tests compare
+    * against). */
+  private[graft] def kCenterGreedyWithRounds(df: DataFrame, idCol: String,
+      vecCol: String, k: Int, seedId: Long, batchSize: Int): (DataFrame, Int) = {
     val spark = df.sparkSession
     import spark.implicits._
-    val batchSize = spark.conf.getOption("graft.coreset.batch")
-      .map(_.toInt).getOrElse(64)
 
     val base = df.select(col(idCol).cast(LongType).as("id"), col(vecCol).as("v"))
       .localCheckpoint()

@@ -25,9 +25,10 @@ object ClusterQueries {
   /** Shared broadcast/shuffle auto-switch for every node-dimension
     * side (rank, label, alive, degree vectors) joined onto a
     * corpus-sized edge list — the q79 convention generalized. Node
-    * sets at or under `graft.graph.broadcastNodes` (default 5M; the
-    * older `graft.pagerank.broadcastNodes` name is honored so q79
-    * callers keep working) broadcast, and edges never shuffle; beyond
+    * sets at or under `graft.graph.broadcastNodes` (default 5M — a
+    * deployment's executor-memory fit, like
+    * `spark.sql.autoBroadcastJoinThreshold`) broadcast, and edges
+    * never shuffle; beyond
     * it the frame is returned unhinted so the join co-shuffles — node
     * vectors grow linearly with data, and at 100x an unconditional
     * broadcast is the first thing that stops fitting in executor
@@ -35,7 +36,6 @@ object ClusterQueries {
     * row-for-row equivalence for q205/q207/q211/q117. */
   private[graft] def nodeBroadcastLimit(spark: SparkSession): Long =
     spark.conf.getOption("graft.graph.broadcastNodes")
-      .orElse(spark.conf.getOption("graft.pagerank.broadcastNodes"))
       .map(_.toLong).getOrElse(5000000L)
 
   private[graft] def nodeSide(spark: SparkSession, nodeCount: Long)(
@@ -432,7 +432,7 @@ object ClusterQueries {
   /**
    * Rank-vector distribution auto-switches on node count: a
    * dimension-sized node set BROADCASTS the rank vector each iteration
-   * (edges never shuffle); a node set above `graft.pagerank
+   * (edges never shuffle); a node set above `graft.graph
    * .broadcastNodes` (default 5M — the point where a per-iteration
    * broadcast stops fitting comfortably in executor memory) switches to
    * the JOIN-based contribution shuffle: edges are hash-partitioned on

@@ -996,29 +996,25 @@ object CorpusQueries {
   // exclusion |A∩B| = |A|+|B|−|A∪B| on pairwise union sketches.
   // SketchStatsSpec bounds it against the exact plan.
   //
-  // Path selection (the PageRank broadcastNodes pattern): an explicit
-  // `graft.q147.approx` wins; otherwise a MAP-ONLY probe (one cheap
-  // scan summing per-doc shingle counts — no shuffle, no text
-  // materialization past the count) auto-switches to the sketch past
-  // `graft.q147.autoApproxShingles` (default 2e9 occurrences): beyond
-  // that the exact plan's corpus-wide distinct-shingle exchange is the
-  // raw-scale hazard, and the sketch's ~0.4% error is the right trade.
+  // Path selection: the shared column-pruned corpus probe
+  // (`tokenCountEstimate` — one n_chars scan, no text decode; a doc's
+  // shingle count is its token count minus 2, so the estimate errs
+  // toward the sketch) switches to the sketch past 2e9 occurrences:
+  // beyond that the exact plan's corpus-wide distinct-shingle exchange
+  // is the raw-scale hazard, and the sketch's ~0.4% error is the right
+  // trade.
   // ------------------------------------------------------------------
-  private val AutoApproxShinglesDefault = 2000000000L
+  private val SketchShingles = 2000000000L
 
   def q147SourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    spark.conf.getOption("graft.q147.approx").map(_.toBoolean) match {
-      case Some(true) => q147SourceOverlapHll(spark, dir)
-      case Some(false) => q147SourceOverlapExact(spark, dir)
-      case None =>
-        val threshold = spark.conf.getOption("graft.q147.autoApproxShingles")
-          .map(_.toLong).getOrElse(AutoApproxShinglesDefault)
-        val occurrences = Tables.documents(spark, dir)
-          .agg(sum(greatest(size(split(col("text"), " ")) - 2, lit(0))).as("n"))
-          .collect()(0).getLong(0)
-        if (occurrences > threshold) q147SourceOverlapHll(spark, dir)
-        else q147SourceOverlapExact(spark, dir)
-    }
+    q147SourceOverlapAuto(spark, dir)
+
+  /** q147's size switch; the threshold is an argument so a test can
+    * push a small corpus past it. */
+  private[graft] def q147SourceOverlapAuto(spark: SparkSession, dir: String,
+      sketchAbove: Long = SketchShingles): DataFrame =
+    if (tokenCountEstimate(spark, dir) > sketchAbove) q147SourceOverlapHll(spark, dir)
+    else q147SourceOverlapExact(spark, dir)
 
   private def q147SourceOverlapExact(spark: SparkSession, dir: String): DataFrame = {
       // compiled 3-gram kernel (RollingWindowsExpression): the
@@ -1436,9 +1432,8 @@ object CorpusQueries {
   // combined), one per-source rollup, final order range. No window,
   // no spectrum table, no top-k needed. The tally's exchange carries
   // DISTINCT terms (combine is effective), but past ~10⁹ distinct
-  // terms even that is the bottleneck — so past
-  // `graft.q238.autoApproxTokens` (default 10⁹; explicit
-  // `graft.q238.approx` wins — q237's path-selection pattern) the
+  // terms even that is the bottleneck — so past an estimated 10⁹
+  // tokens (`tokenCountEstimate`, q237's size switch) the
   // tally keys on xxhash64(term) instead of the term STRING: every
   // aggregate here depends only on the count multiset, never on term
   // identity, so the exchange narrows to 8-byte longs and the result
@@ -1447,34 +1442,28 @@ object CorpusQueries {
   // hashed ≡ exact on the test corpus). The oracle pins the exact
   // path.
   // ------------------------------------------------------------------
-  /** Cheap corpus-size probe for the auto-approx switches: estimated
+  /** Cheap corpus-size probe for the scale switches: estimated
     * token count from the `n_chars` column (column-pruned scan — no
     * text decode, no tokenize). chars/4 is an ESTIMATE for an
     * order-of-magnitude switch, not a bound: exact at 3-char tokens
     * (+1 separator), it OVERESTIMATES for ≥4-char natural-language
     * tokens (erring toward the scale path — the safe direction) and
-    * underestimates only for degenerate ≤2-char-token corpora, where
-    * the explicit `graft.q23x.approx` conf or a lowered threshold is
-    * the override. NULL-safe: an empty corpus probes as 0 tokens
-    * (exact path). Replaces the round-13 probe that re-tokenized the
-    * whole corpus just to pick a path. */
+    * underestimates only for degenerate ≤2-char-token corpora.
+    * NULL-safe: an empty corpus probes as 0 tokens (exact path). The
+    * one probe behind q147, q237, q238, q241 and q255 — no switch
+    * re-tokenizes the corpus just to pick a path. */
   private[queries] def tokenCountEstimate(spark: SparkSession, dir: String): Long = {
     val r = Tables.documents(spark, dir)
       .agg(sum(col("n_chars").cast(LongType)).as("n")).collect()(0)
     if (r.isNullAt(0)) 0L else r.getLong(0) / 4L
   }
 
-  def q238LexicalConcentration(spark: SparkSession, dir: String): DataFrame =
-    spark.conf.getOption("graft.q238.approx").map(_.toBoolean) match {
-      case Some(h) => q238Body(spark, dir, hashed = h)
-      case None =>
-        val threshold = spark.conf.getOption("graft.q238.autoApproxTokens")
-          .map(_.toLong).getOrElse(1000000000L)
-        q238Body(spark, dir,
-          hashed = tokenCountEstimate(spark, dir) > threshold)
-    }
+  private val HashedTallyTokens = 1000000000L
 
-  private def q238Body(
+  def q238LexicalConcentration(spark: SparkSession, dir: String): DataFrame =
+    q238Body(spark, dir, hashed = tokenCountEstimate(spark, dir) > HashedTallyTokens)
+
+  private[graft] def q238Body(
       spark: SparkSession, dir: String, hashed: Boolean): DataFrame = {
     val dec = DecimalType(38, 0)
     val toks = Tables.documents(spark, dir)
@@ -1560,8 +1549,8 @@ object CorpusQueries {
   // |sources|² rows at any corpus size.
   //
   // Past ~10⁹ distinct terms the tally exchange's term STRINGS become
-  // the bottleneck, so past `graft.q241.autoApproxTokens` (default
-  // 10⁹; explicit `graft.q241.approx` wins) the vocabulary heap FEED
+  // the bottleneck, so past an estimated 10⁹ tokens
+  // (`tokenCountEstimate`) the vocabulary heap FEED
   // switches to an xxhash64 key: top-2K candidate hashes ride a
   // narrow (hash, count) exchange + bounded heap, candidate term
   // strings are recovered by ONE broadcast hash semi-join, and the
@@ -1578,16 +1567,9 @@ object CorpusQueries {
   // drift bound on the test corpus. The oracle pins the exact path.
   // ------------------------------------------------------------------
   def q241BurrowsDelta(spark: SparkSession, dir: String): DataFrame =
-    spark.conf.getOption("graft.q241.approx").map(_.toBoolean) match {
-      case Some(h) => q241Body(spark, dir, hashedFeed = h)
-      case None =>
-        val threshold = spark.conf.getOption("graft.q241.autoApproxTokens")
-          .map(_.toLong).getOrElse(1000000000L)
-        q241Body(spark, dir,
-          hashedFeed = tokenCountEstimate(spark, dir) > threshold)
-    }
+    q241Body(spark, dir, hashedFeed = tokenCountEstimate(spark, dir) > HashedTallyTokens)
 
-  private def q241Body(
+  private[graft] def q241Body(
       spark: SparkSession, dir: String, hashedFeed: Boolean): DataFrame = {
     import graft.functions.TopKTermAggregate.topKTerm
     import graft.functions.TopKAggregate.topK

@@ -62,12 +62,11 @@ object DedupAuditQueries {
   // counts each triangle exactly once).
   //
   // Corpus scale: the banded pair source AUTO-ENGAGES past a corpus
-  // probe (round 16 — a conf-gated scale path is a scale path that
-  // won't fire at 100×): `graft.q255.banded` forces either path, else
-  // the q237/q238 `tokenCountEstimate` probe (column-pruned n_chars
-  // scan) picks `bandedEdges` past `graft.q255.autoBandedTokens`
-  // (default 10⁹ tokens — far above every test SF, so the oracle pins
-  // the exact path; far below any production corpus). The banded
+  // probe (a conf-gated scale path is a scale path that won't fire at
+  // 100×): the q237/q238 `tokenCountEstimate` probe (column-pruned
+  // n_chars scan) picks `bandedEdges` past 10⁹ tokens — far above
+  // every test SF, so the oracle pins the exact path; far below any
+  // production corpus. The banded
   // source swaps ONLY the pair source for MinHash-banded candidates +
   // the identical capped-τ verify (`bandedEdges` below). The default
   // 3-band×3-row layout is recall-unsafe at τ = 0.3 (per-pair hit
@@ -78,15 +77,19 @@ object DedupAuditQueries {
   // (precision 1 by construction); BandedRecallSpec pins the recall
   // floor.
   // ------------------------------------------------------------------
-  def q255DupGraphTransitivity(spark: SparkSession, dir: String): DataFrame = {
+  private val BandedTokens = 1000000000L
+
+  def q255DupGraphTransitivity(spark: SparkSession, dir: String): DataFrame =
+    q255DupGraphTransitivityAuto(spark, dir)
+
+  /** q255's size switch; the threshold is an argument so a test can
+    * push a small corpus past it. */
+  private[graft] def q255DupGraphTransitivityAuto(spark: SparkSession,
+      dir: String, bandedAbove: Long = BandedTokens): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val banded = spark.conf.getOption("graft.q255.banded").map(_.toBoolean)
-      .getOrElse {
-        val threshold = spark.conf.getOption("graft.q255.autoBandedTokens")
-          .map(_.toLong).getOrElse(1000000000L)
-        CorpusQueries.tokenCountEstimate(spark, dir) > threshold
-      }
-    graphTransitivity(if (banded) bandedEdges(docs) else exactEdges(docs))
+    graphTransitivity(
+      if (CorpusQueries.tokenCountEstimate(spark, dir) > bandedAbove) bandedEdges(docs)
+      else exactEdges(docs))
   }
 
   /** Exact τ = 0.3 near-dup edge set over capped postings — the
@@ -102,7 +105,7 @@ object DedupAuditQueries {
         (col("n_a") + col("n_b") - col("inter")) * 300)
       .select(col("id_a").as("u"), col("id_b").as("v"))
 
-  /** Banded corpus-scale pair source for q255 (`graft.q255.banded`):
+  /** Banded corpus-scale pair source for q255:
     * q31's candidate machinery with a τ≈0.3-tuned layout — 9 bands of
     * 1 MinHash row each, so a true edge (capped Jaccard ≥ 0.3 implies
     * FULL-set Jaccard ≥ 0.3, which the signature estimates) is missed

@@ -129,15 +129,6 @@ object EmbedAuditQueries {
       |FROM agg a JOIN nn n ON n.label = a.label
       |ORDER BY label""".stripMargin
 
-  /** Shared k-NN edge set for q251/q252: every vector queries the
-    * corpus for its top-10 cosine neighbors. Exact brute force (the
-    * CORRECTNESS anchor — q35/q126's contract, query side broadcast +
-    * bounded map-side heaps) up to `graft.embaudit.annThreshold`
-    * vectors (default 50k, the q225 convention); past it — or under an
-    * explicit `graft.embaudit.ann` — the SAME downstream composes over
-    * `Similarity.ivfTopK`'s partitioned index, so neither the
-    * broadcast nor the pair count grows with the corpus. The oracle
-    * pins the exact path; ApproxParitySpec bounds the ANN drift. */
   /** IVF list count for an N-vector self-kNN audit: nlist ≈ √N. At
     * FIXED nlist the audit (query side = corpus) does
     * N·(N/nlist)·nprobe candidate dots — still quadratic. √N lists of
@@ -151,7 +142,19 @@ object EmbedAuditQueries {
     math.max(64L, math.ceil(math.sqrt(n.toDouble)).toLong)
       .min(1000000L).toInt
 
-  private def knnEdges(spark: SparkSession, dir: String, k: Int): DataFrame = {
+  private val AnnVectors = 50000L
+
+  /** Shared k-NN edge set for q251/q252: every vector queries the
+    * corpus for its top-10 cosine neighbors. Exact brute force (the
+    * CORRECTNESS anchor — q35/q126's contract, query side broadcast +
+    * bounded map-side heaps) up to `annAbove` vectors (50k in
+    * production, the q225 convention); past it the SAME downstream
+    * composes over `Similarity.ivfTopK`'s partitioned index, so
+    * neither the broadcast nor the pair count grows with the corpus.
+    * The oracle pins the exact path; ApproxParitySpec bounds the ANN
+    * drift. */
+  private def knnEdges(spark: SparkSession, dir: String, k: Int,
+      annAbove: Long): DataFrame = {
     // CPU-dense pair loop over a SMALL parquet (1-2 splits): spread an
     // under-partitioned corpus or the whole n·n dot-product loop
     // serializes on one task (the q145 guard)
@@ -163,15 +166,9 @@ object EmbedAuditQueries {
     // probe the RAW scan: counting the repartitioned frame would
     // execute the guard's round-robin shuffle once just for the
     // count and again for the real query. The count serves BOTH the
-    // path switch and the ANN index sizing, so it runs at most once.
-    lazy val n = raw.count()
-    val useAnn = spark.conf.getOption("graft.embaudit.ann")
-      .map(_.toBoolean).getOrElse {
-        val threshold = spark.conf.getOption("graft.embaudit.annThreshold")
-          .map(_.toLong).getOrElse(50000L)
-        n > threshold
-      }
-    if (useAnn)
+    // path switch and the ANN index sizing, so it runs once.
+    val n = raw.count()
+    if (n > annAbove)
       Similarity.ivfTopK(emb, queries, "vec_id", "embedding", "qid", "qv",
         k = k, nlist = annNlist(n), nprobe = 8)
     else
@@ -194,10 +191,16 @@ object EmbedAuditQueries {
   // exact sums. Plan: broadcast query side + bounded heaps (no global
   // sort), two label joins on the k·n edge rows, one label rollup.
   // ------------------------------------------------------------------
-  def q251LabelNoise(spark: SparkSession, dir: String): DataFrame = {
+  def q251LabelNoise(spark: SparkSession, dir: String): DataFrame =
+    q251LabelNoiseAuto(spark, dir)
+
+  /** q251 with the kNN size switch's threshold as an argument, so a
+    * test can push a small corpus onto the ANN path. */
+  private[graft] def q251LabelNoiseAuto(spark: SparkSession, dir: String,
+      annAbove: Long = AnnVectors): DataFrame = {
     val labels = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast(IntegerType).as("label"))
-    val edges = knnEdges(spark, dir, k = 10)
+    val edges = knnEdges(spark, dir, k = 10, annAbove)
       .join(labels.select(col("vec_id").as("query_id"),
         col("label").as("ql")), "query_id")
       .join(labels.select(col("vec_id").as("neighbor_id"),
@@ -253,11 +256,17 @@ object EmbedAuditQueries {
   // DECIMAL/HUGEINT sums — the whole numerator/denominator exact, ONE
   // identical double expression at the end (q56's moment protocol).
   // ------------------------------------------------------------------
-  def q252Hubness(spark: SparkSession, dir: String): DataFrame = {
+  def q252Hubness(spark: SparkSession, dir: String): DataFrame =
+    q252HubnessAuto(spark, dir)
+
+  /** q252 with the kNN size switch's threshold as an argument (see
+    * `q251LabelNoiseAuto`). */
+  private[graft] def q252HubnessAuto(spark: SparkSession, dir: String,
+      annAbove: Long = AnnVectors): DataFrame = {
     val dec = DecimalType(38, 0)
     val labels = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast(IntegerType).as("label"))
-    val occ = knnEdges(spark, dir, k = 10)
+    val occ = knnEdges(spark, dir, k = 10, annAbove)
       .groupBy(col("neighbor_id").as("vec_id"))
       .agg(count(lit(1)).as("nk"))
     val full = labels.join(occ, Seq("vec_id"), "left")

@@ -457,11 +457,10 @@ object EventAnalytics {
   // fan each row out to the ≤7 window-end days it supports (a bounded
   // ×7 explode, NOT a range join), dedup (target, user), tally.
   // Restricting targets to observed days is a broadcast semi-join.
-  // The 100 TB path is IMPLEMENTED behind `graft.q115.approx=true`:
-  // per-day mergeable HLL sketches fanned ×7 and union-merged per
-  // target (q115RollingDistinctHll) — the oracle gates the exact
-  // default; SketchStatsSpec bounds the sketch plan within 2% of it
-  // per target day at sf0.1.
+  // The 100 TB variant is q115RollingDistinctHll: per-day mergeable
+  // HLL sketches fanned ×7 and union-merged per target — the oracle
+  // gates the exact plan; SketchStatsSpec bounds the sketch plan
+  // within 2% of it per target day at sf0.1.
   // ------------------------------------------------------------------
   // ------------------------------------------------------------------
   // q118: TIMEOUT-bounded funnel — q68 asks "did the stages happen in
@@ -527,29 +526,26 @@ object EventAnalytics {
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM t3) AS n_purchased_24h,
       |  (SELECT quantile_cont(secs, 0.5) FROM d) AS median_secs_to_convert""".stripMargin
 
-  def q115RollingDistinct(spark: SparkSession, dir: String): DataFrame =
-    if (spark.conf.getOption("graft.q115.approx").exists(_.toBoolean))
-      q115RollingDistinctHll(spark, dir)
-    else {
-      val du = Tables.events(spark, dir)
-        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      val days = du.select(col("day").as("target")).distinct()
-      du.select(explode(expr("sequence(day, date_add(day, 6))")).as("target"),
-          col("user_id"))
-        .join(broadcast(days), Seq("target"), "left_semi")
-        .distinct()
-        .groupBy(col("target"))
-        .agg(count(lit(1)).as("active_users_7d"))
-    }
+  def q115RollingDistinct(spark: SparkSession, dir: String): DataFrame = {
+    val du = Tables.events(spark, dir)
+      .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
+    val days = du.select(col("day").as("target")).distinct()
+    du.select(explode(expr("sequence(day, date_add(day, 6))")).as("target"),
+        col("user_id"))
+      .join(broadcast(days), Seq("target"), "left_semi")
+      .distinct()
+      .groupBy(col("target"))
+      .agg(count(lit(1)).as("active_users_7d"))
+  }
 
   /**
-   * The 100 TB shape of q115, selectable via `graft.q115.approx=true`:
-   * one mergeable DataSketches HLL state per day (partial-aggregable —
-   * the (day,user) row explosion never happens), a ×7 fanout of
+   * The 100 TB shape of q115: one mergeable DataSketches HLL state
+   * per day (partial-aggregable — the (day,user) row explosion never
+   * happens), a ×7 fanout of
    * KILOBYTE sketch blobs instead of user rows, and a union-merge per
    * target day. Work per target is 7 sketch merges regardless of user
    * cardinality; accuracy is the sketch's standard error (~0.8% at the
-   * default lgK=12), parity-bounded by SketchParitySpec.
+   * default lgK=12), parity-bounded by SketchStatsSpec.
    */
   def q115RollingDistinctHll(spark: SparkSession, dir: String): DataFrame = {
     val perDay = Tables.events(spark, dir)

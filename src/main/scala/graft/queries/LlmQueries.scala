@@ -1718,26 +1718,18 @@ object LlmQueries {
   // Path selection (the q147 pattern): the exact broadcast screen is
   // linear in |corpus|×|bench| — right while the bench side is a fixed
   // benchmark suite, a hazard when a user screens against a LARGE
-  // bench set. An explicit `graft.q225.ann` wins; otherwise a cheap
-  // bench-count probe auto-switches to the IVF composition
-  // (q225BenchProximityAnn) past `graft.q225.autoAnnBench` (default
-  // 50 000 bench vectors — past that the broadcast blob is tens of MB
-  // and the per-row candidate count stops being "tiny side").
+  // bench set. A cheap bench-count probe switches to the IVF
+  // composition (q225BenchProximityAnn) past 50 000 bench vectors —
+  // past that the broadcast blob is tens of MB and the per-row
+  // candidate count stops being "tiny side".
   // ------------------------------------------------------------------
-  private val AutoAnnBenchDefault = 50000L
+  private val AnnBenchVectors = 50000L
 
-  def q225BenchProximity(spark: SparkSession, dir: String): DataFrame =
-    spark.conf.getOption("graft.q225.ann").map(_.toBoolean) match {
-      case Some(true) => q225BenchProximityAnn(spark, dir)
-      case Some(false) => q225BenchProximityExact(spark, dir)
-      case None =>
-        val threshold = spark.conf.getOption("graft.q225.autoAnnBench")
-          .map(_.toLong).getOrElse(AutoAnnBenchDefault)
-        val benchCount = Tables.embeddings(spark, dir)
-          .filter(col("vec_id") % 89 === 0).count()
-        if (benchCount > threshold) q225BenchProximityAnn(spark, dir)
-        else q225BenchProximityExact(spark, dir)
-    }
+  def q225BenchProximity(spark: SparkSession, dir: String): DataFrame = {
+    val benchVectors = Tables.embeddings(spark, dir).filter(col("vec_id") % 89 === 0).count()
+    if (benchVectors > AnnBenchVectors) q225BenchProximityAnn(spark, dir)
+    else q225BenchProximityExact(spark, dir)
+  }
 
   private[graft] def q225BenchProximityExact(
       spark: SparkSession, dir: String): DataFrame = {
@@ -1752,6 +1744,8 @@ object LlmQueries {
       .agg(round(max(col("sim")) * 10000).cast(LongType).as("pm"))
     q225Bands(best)
   }
+
+  private val AnnProbes = 4
 
   /**
    * Large-bench path of q225: the per-vector best-bench cosine comes
@@ -1771,17 +1765,14 @@ object LlmQueries {
     // nlist scales as √|bench| (EmbedAuditQueries.annNlist — the same
     // balance point as q251/q252's self-kNN: at a FIXED nlist the
     // corpus×bench candidate work N·(B/nlist)·nprobe stays
-    // quadratic-in-scale since B = N/89 grows with the corpus). An
-    // explicit `graft.q225.nlist` still wins; the count is a
-    // column-pruned metadata-cheap probe.
-    val nlist = spark.conf.getOption("graft.q225.nlist").map(_.toInt)
-      .getOrElse(EmbedAuditQueries.annNlist(bench.count()))
-    val nprobe = spark.conf.getOption("graft.q225.nprobe").map(_.toInt).getOrElse(4)
+    // quadratic-in-scale since B = N/89 grows with the corpus). The
+    // count is a column-pruned metadata-cheap probe.
+    val nlist = EmbedAuditQueries.annNlist(bench.count())
     val corp = emb.filter(col("vec_id") % 89 =!= 0)
     val best = Similarity.ivfTopK(
         bench, corp.select(col("vec_id"), col("embedding")),
         "bid", "bvec", "vec_id", "embedding",
-        k = 1, nlist = nlist, nprobe = nprobe)
+        k = 1, nlist = nlist, nprobe = AnnProbes)
       .select(col("query_id").as("vec_id"),
         round(col("sim") * 10000).cast(LongType).as("pm"))
     q225Bands(corp.select(col("vec_id"), col("label"))
@@ -1848,8 +1839,8 @@ object LlmQueries {
   // deterministically (the corpus has no excerpt column — q151's
   // convention: the SCREEN is the operator under test): an
   // ABSOLUTE-SIZE doc_id decimation (modulus derived from one count()
-  // probe to target `graft.q232.probeTarget` ≈ 100 probes — the
-  // oracle pins the default) takes each probe doc's 40-token prefix
+  // probe to target ≈ 100 probes — the oracle derives the same
+  // modulus) takes each probe doc's 40-token prefix
   // as the "quote", and the screen must trace each one back to a
   // containing corpus doc. The round-13 fixed `% 20` grew the probe
   // side linearly with the corpus; the derived modulus keeps the
@@ -1864,6 +1855,8 @@ object LlmQueries {
   // bounded per-probe argmax (candidates ≤ df-cap × probe shingles).
   // Integer permille output.
   // ------------------------------------------------------------------
+  private val ContainmentProbes = 100L
+
   def q232Containment(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
@@ -1879,10 +1872,8 @@ object LlmQueries {
       cPostsAll.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 50).select(col("s")),
       Seq("s"), "left_semi")
-    val probeTarget = spark.conf.getOption("graft.q232.probeTarget")
-      .map(_.toLong).getOrElse(100L)
     val probeMod = graft.queries.StatsQueries.sampleModulus(
-      docs.count(), probeTarget)
+      docs.count(), ContainmentProbes)
     val probes = docs.filter(col("doc_id") % probeMod === 0)
       .select(col("doc_id").as("eid"),
         concat_ws(" ", slice(array_remove(split(col("text"), " "), ""),

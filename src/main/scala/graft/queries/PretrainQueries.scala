@@ -996,28 +996,21 @@ object PretrainQueries {
   //
   // The exact tally is still shuffle-LINEAR in token count (every
   // distinct gram string crosses the wire once — measured 8× wall on
-  // the 10× replica), so past `graft.q237.autoApproxTokens` (default
-  // 1e8 tokens; explicit `graft.q237.approx` wins — q147's path-
-  // selection pattern) the distinct side switches to a per-(source,n)
+  // the 10× replica), so past an estimated 1e8 tokens (the shared
+  // column-pruned `CorpusQueries.tokenCountEstimate` probe) the
+  // distinct side switches to a per-(source,n)
   // HLL sketch: partial-aggregable, so gram strings NEVER shuffle and
   // only 3·|sources| kilobyte sketches move. The oracle pins the
   // exact path; the sketch path carries lgK=14's ~0.4% error.
   // ------------------------------------------------------------------
-  def q237NgramDiversity(spark: SparkSession, dir: String): DataFrame =
-    spark.conf.getOption("graft.q237.approx").map(_.toBoolean) match {
-      case Some(true) => q237NgramDiversityHll(spark, dir)
-      case Some(false) => q237NgramDiversityExact(spark, dir)
-      case None =>
-        val threshold = spark.conf.getOption("graft.q237.autoApproxTokens")
-          .map(_.toLong).getOrElse(100000000L)
-        // column-pruned n_chars estimate (CorpusQueries helper) — the
-        // round-13 probe re-tokenized the whole corpus to pick a path
-        val tokens = CorpusQueries.tokenCountEstimate(spark, dir)
-        if (tokens > threshold) q237NgramDiversityHll(spark, dir)
-        else q237NgramDiversityExact(spark, dir)
-    }
+  private val SketchTokens = 100000000L
 
-  private def q237NgramDiversityExact(spark: SparkSession, dir: String): DataFrame = {
+  def q237NgramDiversity(spark: SparkSession, dir: String): DataFrame =
+    if (CorpusQueries.tokenCountEstimate(spark, dir) > SketchTokens)
+      q237NgramDiversityHll(spark, dir)
+    else q237NgramDiversityExact(spark, dir)
+
+  private[graft] def q237NgramDiversityExact(spark: SparkSession, dir: String): DataFrame = {
     // compiled one-pass kernel (MultiNgramsExpression): the declarative
     // per-width slice/concat_ws dual re-evaluated an interpreted lambda
     // per position per width and was the heaviest bench query (6.1 s at
@@ -1045,7 +1038,7 @@ object PretrainQueries {
    * count rides the same rollup. Work past the scan is 3·|sources|
    * sketch merges regardless of corpus size.
    */
-  private def q237NgramDiversityHll(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def q237NgramDiversityHll(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
       .select(col("source"),
         graft.functions.TextHashFunctions.multiNgrams(col("text"), 3).as("gs"))

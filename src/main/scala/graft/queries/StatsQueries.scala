@@ -386,17 +386,20 @@ object StatsQueries {
   // scan parallelizes fully. At raw 100 TB grain the same plan swaps in
   // percentile_approx sketches (partial-aggregable) unchanged.
   // ------------------------------------------------------------------
-  def q92PercentileBands(spark: SparkSession, dir: String): DataFrame = {
-    // 100 TB path, IMPLEMENTED behind `graft.q92.approx=true`: swap the
-    // exact per-group percentile state for `percentile_approx`'s
-    // mergeable KLL-style sketch (partial-aggregable, bounded memory
-    // per group regardless of group size). The oracle gates the exact
-    // default; SketchStatsSpec bounds the sketch plan's error vs it.
-    val pct: (Double, String) => Column =
-      if (spark.conf.getOption("graft.q92.approx").exists(_.toBoolean))
-        (p, n) => round(expr(s"percentile_approx(value, $p, 2500)"), 4).as(n)
-      else
-        (p, n) => round(expr(s"percentile(value, $p)"), 4).as(n)
+  def q92PercentileBands(spark: SparkSession, dir: String): DataFrame =
+    q92Bands(spark, dir, p => s"percentile(value, $p)")
+
+  /** 100 TB variant of q92: swaps the exact per-group percentile state
+    * for `percentile_approx`'s mergeable KLL-style sketch (partial-
+    * aggregable, bounded memory per group regardless of group size).
+    * The oracle gates the exact plan; SketchStatsSpec bounds this
+    * plan's error against it. */
+  private[graft] def q92PercentileBandsSketch(spark: SparkSession, dir: String): DataFrame =
+    q92Bands(spark, dir, p => s"percentile_approx(value, $p, 2500)")
+
+  private def q92Bands(spark: SparkSession, dir: String,
+      pctSql: Double => String): DataFrame = {
+    def pct(p: Double, n: String): Column = round(expr(pctSql(p)), 4).as(n)
     Tables.events(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"),
@@ -1294,8 +1297,8 @@ object StatsQueries {
   // audit is strictly cheaper than the join it certifies. PC is
   // estimated on an ABSOLUTE-SIZE key decimation: the modulus is
   // derived from one count() probe to target a constant-row sample
-  // (`graft.q248.sampleTarget`, default 2000 — the oracle pins the
-  // default), so the brute-force truth anchor's cost is a CONSTANT
+  // (2000 rows — the oracle derives the same modulus), so the
+  // brute-force truth anchor's cost is a CONSTANT
   // ~target²/2 JW comparisons at ANY corpus size. The round-13
   // fixed-fraction `% 20` grew the broadcast side linearly and the
   // comparisons quadratically with N — a genuine 100×-scale killer.
@@ -1311,6 +1314,8 @@ object StatsQueries {
   // with zero true pairs reports caught = 0 (not NULL — the oracle's
   // COALESCE) and pc_micro = NULL.
   // ------------------------------------------------------------------
+  private val BlockingSample = 2000L
+
   def q248BlockingAudit(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.StringSimilarityFunctions.jaroWinkler
     val dec = DecimalType(38, 0)
@@ -1319,9 +1324,7 @@ object StatsQueries {
       split(col("p_name"), " ").getItem(0).as("adj"),
       substring(split(col("p_name"), " ").getItem(1), 1, 1).as("b2"))
       .localCheckpoint() // reused: totals, block tally, sample side
-    val target = spark.conf.getOption("graft.q248.sampleTarget")
-      .map(_.toLong).getOrElse(2000L)
-    val modulus = StatsQueries.sampleModulus(p.count(), target)
+    val modulus = StatsQueries.sampleModulus(p.count(), BlockingSample)
     val tot = p.agg(count(lit(1)).as("n"))
       .select(col("n"),
         expr("CAST((CAST(n AS DECIMAL(38,0)) * (n - 1)) div 2 " +

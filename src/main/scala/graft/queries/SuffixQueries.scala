@@ -32,41 +32,6 @@ object SuffixQueries {
   private val saCache =
     new java.util.concurrent.ConcurrentHashMap[String, SuffixArray.SA]()
 
-  /** Cache key / staleness stamp is the corpus file's mtime+size, so
-    * regenerating the data under the same path invalidates both the
-    * session memo AND the persisted index (stale index = silently
-    * wrong ranks). Memo bounded: key churn clears the map rather than
-    * pinning dead blocks for the application's lifetime. Persistence
-    * is on by default; `graft.sa.persist=false` keeps everything
-    * session-local (read-only warehouse environments). */
-  private def cachedSa(spark: SparkSession, dir: String): SuffixArray.SA = {
-    val f = java.nio.file.Paths.get(dir, "documents.parquet")
-    val stamp =
-      if (java.nio.file.Files.exists(f))
-        s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}:${java.nio.file.Files.size(f)}"
-      else "absent"
-    if (saCache.size > 8) saCache.clear()
-    saCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir|$stamp",
-      _ => {
-        if (spark.conf.get("graft.sa.persist", "true").toBoolean) {
-          val cache = new graft.cache.SparkCache(spark,
-            spark.conf.get("graft.sa.db", "graft_sa_index"))
-          cache.reopen() // fresh JVM: re-register leftover index tables
-          val name = "sa_" + java.security.MessageDigest.getInstance("MD5")
-            .digest(dir.getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString.take(12)
-          SuffixArray.load(cache, name, stamp).getOrElse {
-            val sa = SuffixArray.build(shard(spark, dir), "doc_id", "text")
-            SuffixArray.persist(sa, cache, name, stamp)
-            // hand back the TABLE-BACKED copy: queries then run over
-            // the persisted index's lineage-free pruned scans
-            SuffixArray.load(cache, name, stamp).getOrElse(sa)
-          }
-        } else SuffixArray.build(shard(spark, dir), "doc_id", "text")
-      })
-  }
-
   // The SA-adjacent LCP frame is the second half of the index (every
   // repeat-mass query starts from it), so it shares the memo +
   // persistence lifecycle: computed once per (corpus, stamp), persisted
@@ -74,32 +39,58 @@ object SuffixQueries {
   private val lcpCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def cachedAdjacentLcp(spark: SparkSession, dir: String): DataFrame = {
+  /** One index artifact per (application, corpus, stamp), memoized in
+    * `memo`. The staleness stamp is the corpus file's mtime+size, so
+    * regenerating the data under the same path invalidates both the
+    * session memo AND the persisted index (stale index = silently
+    * wrong ranks). Memo bounded: key churn clears the map rather than
+    * pinning dead blocks for the application's lifetime. Persistence
+    * is on by default: `persisted(cache, name, stamp)` loads or builds
+    * the artifact in the index database; `graft.sa.persist=false`
+    * keeps everything session-local (`local`, for read-only warehouse
+    * environments). */
+  private def memoized[A](memo: java.util.concurrent.ConcurrentHashMap[String, A],
+      spark: SparkSession, dir: String)(
+      persisted: (graft.cache.SparkCache, String, String) => A)(local: => A): A = {
     val f = java.nio.file.Paths.get(dir, "documents.parquet")
     val stamp =
       if (java.nio.file.Files.exists(f))
         s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}:${java.nio.file.Files.size(f)}"
       else "absent"
-    if (lcpCache.size > 8) lcpCache.clear()
-    lcpCache.computeIfAbsent(
+    if (memo.size > 8) memo.clear()
+    memo.computeIfAbsent(
       s"${spark.sparkContext.applicationId}|$dir|$stamp",
-      _ => {
+      _ =>
         if (spark.conf.get("graft.sa.persist", "true").toBoolean) {
           val cache = new graft.cache.SparkCache(spark,
             spark.conf.get("graft.sa.db", "graft_sa_index"))
-          cache.reopen()
+          cache.reopen() // fresh JVM: re-register leftover index tables
           val name = "sa_" + java.security.MessageDigest.getInstance("MD5")
             .digest(dir.getBytes("UTF-8"))
             .map("%02x".format(_)).mkString.take(12)
-          SuffixArray.loadAdjacentLcp(cache, name, stamp).getOrElse {
-            val lcp = SuffixArray.adjacentLcp(cachedSa(spark, dir))
-              .localCheckpoint()
-            SuffixArray.persistAdjacentLcp(lcp, cache, name, stamp)
-            SuffixArray.loadAdjacentLcp(cache, name, stamp).getOrElse(lcp)
-          }
-        } else SuffixArray.adjacentLcp(cachedSa(spark, dir)).localCheckpoint()
-      })
+          persisted(cache, name, stamp)
+        } else local)
   }
+
+  private def cachedSa(spark: SparkSession, dir: String): SuffixArray.SA =
+    memoized(saCache, spark, dir) { (cache, name, stamp) =>
+      SuffixArray.load(cache, name, stamp).getOrElse {
+        val sa = SuffixArray.build(shard(spark, dir), "doc_id", "text")
+        SuffixArray.persist(sa, cache, name, stamp)
+        // hand back the TABLE-BACKED copy: queries then run over
+        // the persisted index's lineage-free pruned scans
+        SuffixArray.load(cache, name, stamp).getOrElse(sa)
+      }
+    }(SuffixArray.build(shard(spark, dir), "doc_id", "text"))
+
+  private def cachedAdjacentLcp(spark: SparkSession, dir: String): DataFrame =
+    memoized(lcpCache, spark, dir) { (cache, name, stamp) =>
+      SuffixArray.loadAdjacentLcp(cache, name, stamp).getOrElse {
+        val lcp = SuffixArray.adjacentLcp(cachedSa(spark, dir)).localCheckpoint()
+        SuffixArray.persistAdjacentLcp(lcp, cache, name, stamp)
+        SuffixArray.loadAdjacentLcp(cache, name, stamp).getOrElse(lcp)
+      }
+    }(SuffixArray.adjacentLcp(cachedSa(spark, dir)).localCheckpoint())
 
   // ------------------------------------------------------------------
   // q163: suffix-array ranks — dense rank of every corpus suffix in

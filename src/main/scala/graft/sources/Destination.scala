@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cache.SparkCache
 import graft.operators.Records
+import graft.protocol.AirbyteMessage
 
 /**
  * Destination replay (reference S9: `airbyte/destinations/base.py:310-363`,
@@ -44,7 +45,7 @@ object Destination {
     val payload = to_json(struct(df.columns.map(col).toSeq: _*))
     df.select(
       concat(
-        lit(s"""{"type":"RECORD","record":{"stream":"$streamName","data":"""),
+        lit(s"""{"type":"RECORD","record":{"stream":${jsonString(streamName)},"data":"""),
         payload,
         lit(s""","emitted_at":"""),
         (unix_timestamp(current_timestamp()) * 1000).cast("string"),
@@ -54,8 +55,12 @@ object Destination {
   /** Final STATE line for the stream (source's latest checkpoint). */
   def stateMessage(cache: SparkCache, sourceName: String, streamName: String): Option[String] =
     cache.latestState(sourceName, streamName).map { st =>
-      s"""{"type":"STATE","state":{"type":"STREAM","stream":{"stream_descriptor":{"name":"$streamName"},"stream_state":$st}}}"""
+      s"""{"type":"STATE","state":{"type":"STREAM","stream":{"stream_descriptor":{"name":${jsonString(streamName)}},"stream_state":$st}}}"""
     }
+
+  /** `s` as a quoted, escaped JSON string literal. */
+  private def jsonString(s: String): String =
+    AirbyteMessage.mapper.writeValueAsString(s)
 
   /**
    * Pump a stream into an external destination process

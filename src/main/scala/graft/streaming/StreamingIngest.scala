@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.cache.SparkCache
 import graft.operators.Records
-import graft.protocol.{ConfiguredCatalog, WriteStrategy}
+import graft.protocol.{AirbyteMessage, ConfiguredCatalog, WriteStrategy}
 
 /**
  * Streaming ingestion: the reference's message loop (ST1/ST2,
@@ -21,10 +21,13 @@ import graft.protocol.{ConfiguredCatalog, WriteStrategy}
  *  - per-batch finalize (append/merge into the final table) followed by
  *    state write IN THE SAME batch function ≈ "state finalized only after
  *    batches land" at-least-once contract (ST2);
- *  - Structured Streaming's checkpoint gives exactly-once batch replay on
- *    top, upgrading the reference's at-least-once to effective
- *    exactly-once for append-only streams, and merge idempotency absorbs
- *    replays for PK streams.
+ *  - the sink is AT-LEAST-ONCE: Structured Streaming's checkpoint
+ *    replays a micro-batch whose commit did not land, and the
+ *    `batch_id` written into state is never read back to skip an
+ *    already-written batch, so an append-only batch replayed after
+ *    its write landed is written twice. Merge idempotency absorbs
+ *    replays for PK streams. A batch-id guard for append streams is
+ *    open work (ROADMAP direction 6).
  *
  * At scale: the streaming source partitions land on executors; the only
  * shuffle is merge's window-by-PK. Watermarking (ST7) bounds state for
@@ -59,7 +62,7 @@ object StreamingIngest {
               .collect()(0).getString(0)
             if (maxCursor != null)
               cache.writeState(sourceName, streamName,
-                s"""{"cursor":"$maxCursor","batch_id":$batchId}""")
+                s"""{"cursor":${AirbyteMessage.mapper.writeValueAsString(maxCursor)},"batch_id":$batchId}""")
           }
         }
         ()

@@ -17,24 +17,20 @@ class ApproxParitySpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def withApprox[A](key: String, v: Boolean)(f: => A): A = {
-    spark.conf.set(key, v.toString)
-    try f finally spark.conf.unset(key)
-  }
+  /** kNN size-switch thresholds that force each path on any corpus. */
+  private def annAbove(ann: Boolean): Long = if (ann) -1L else Long.MaxValue
 
   test("q238 hashed tally equals the exact path bit-for-bit") {
-    val exact = withApprox("graft.q238.approx", false)(
-      CorpusQueries.q238LexicalConcentration(spark, dir).collect().toSeq)
-    val hashed = withApprox("graft.q238.approx", true)(
-      CorpusQueries.q238LexicalConcentration(spark, dir).collect().toSeq)
+    val exact = CorpusQueries.q238Body(spark, dir, hashed = false).collect().toSeq
+    val hashed = CorpusQueries.q238Body(spark, dir, hashed = true).collect().toSeq
     assert(hashed == exact)
   }
 
   test("q251/q252 ANN off-ramp stays within the recall drift bound") {
     import graft.queries.EmbedAuditQueries
-    def noise(ann: Boolean) = withApprox("graft.embaudit.ann", ann)(
-      EmbedAuditQueries.q251LabelNoise(spark, dir).collect()
-        .map(r => r.getInt(0) -> (r.getLong(2), r.getLong(3))).toMap)
+    def noise(ann: Boolean) =
+      EmbedAuditQueries.q251LabelNoiseAuto(spark, dir, annAbove(ann)).collect()
+        .map(r => r.getInt(0) -> (r.getLong(2), r.getLong(3))).toMap
     val exact = noise(false)
     val ann = noise(true)
     assert(ann.keySet == exact.keySet)
@@ -48,9 +44,9 @@ class ApproxParitySpec extends SparkTestBase {
       assert(math.abs(asus - suspects) <= math.max(3L, suspects),
         s"label $label suspects exact=$suspects ann=$asus")
     }
-    def hub(ann: Boolean) = withApprox("graft.embaudit.ann", ann)(
-      EmbedAuditQueries.q252Hubness(spark, dir).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    def hub(ann: Boolean) =
+      EmbedAuditQueries.q252HubnessAuto(spark, dir, annAbove(ann)).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(hub(true).keySet == hub(false).keySet) // same label universe
   }
 
@@ -84,9 +80,9 @@ class ApproxParitySpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-nlist").toString
     rows.toDF("vec_id", "label", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    def noise(ann: Boolean) = withApprox("graft.embaudit.ann", ann)(
-      EmbedAuditQueries.q251LabelNoise(spark, tmp).collect()
-        .map(r => r.getInt(0) -> (r.getLong(2), r.getLong(3))).toMap)
+    def noise(ann: Boolean) =
+      EmbedAuditQueries.q251LabelNoiseAuto(spark, tmp, annAbove(ann)).collect()
+        .map(r => r.getInt(0) -> (r.getLong(2), r.getLong(3))).toMap
     val exact = noise(false)
     val ann = noise(true)
     assert(ann.keySet == exact.keySet)
@@ -102,10 +98,10 @@ class ApproxParitySpec extends SparkTestBase {
   test("q241 hashed vocabulary feed stays within the tie-plateau drift bound") {
     def byPair(rows: Seq[Row]): Map[(String, String), Long] =
       rows.map(r => ((r.getString(0), r.getString(1)), r.getLong(3))).toMap
-    val exact = byPair(withApprox("graft.q241.approx", false)(
-      CorpusQueries.q241BurrowsDelta(spark, dir).collect().toSeq))
-    val hashed = byPair(withApprox("graft.q241.approx", true)(
-      CorpusQueries.q241BurrowsDelta(spark, dir).collect().toSeq))
+    val exact = byPair(
+      CorpusQueries.q241Body(spark, dir, hashedFeed = false).collect().toSeq)
+    val hashed = byPair(
+      CorpusQueries.q241Body(spark, dir, hashedFeed = true).collect().toSeq)
     assert(hashed.keySet == exact.keySet) // same source pairs
     exact.foreach { case (pair, d) =>
       val h = hashed(pair)

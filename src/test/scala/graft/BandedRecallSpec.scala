@@ -8,7 +8,7 @@ import graft.queries.DedupAuditQueries
 
 /**
  * Recall gate for q255's banded corpus-scale pair source
- * (`graft.q255.banded`): candidates from the τ≈0.3-tuned 9-band ×
+ * (`DedupAuditQueries.bandedEdges`): candidates from the τ≈0.3-tuned 9-band ×
  * 1-row MinHash layout, verified with the exact path's capped-τ
  * integer test, must be a SUBSET of the exact edge set (precision 1
  * by construction) and recover at least the S-curve floor of it
@@ -63,13 +63,12 @@ class BandedRecallSpec extends SparkTestBase {
       s"spectrum recall $recall (${banded.size}/${exact.size}) below the floor")
   }
 
-  test("the conf gate routes q255 through the banded source") {
+  test("the banded source composes with q255's transitivity tail") {
     val dir = "/root/testdata/sf0.001"
-    def stats() = SparkEntry.queries("q255_dup_transitivity")(spark, dir)
+    val exactRow = SparkEntry.queries("q255_dup_transitivity")(spark, dir)
       .collect()(0)
-    val exactRow = stats()
-    spark.conf.set("graft.q255.banded", "true")
-    val bandedRow = try stats() finally spark.conf.unset("graft.q255.banded")
+    val bandedRow = DedupAuditQueries.graphTransitivity(DedupAuditQueries
+      .bandedEdges(graft.sources.Tables.documents(spark, dir))).collect()(0)
     // banded edges ⊆ exact edges ⇒ the banded edge count never exceeds
     // the exact one, and with ≥96% per-edge recall it stays close
     assert(bandedRow.getLong(1) <= exactRow.getLong(1),
@@ -83,26 +82,19 @@ class BandedRecallSpec extends SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     def stats() = SparkEntry.queries("q255_dup_transitivity")(spark, dir)
       .collect()(0)
-    // default probe (10⁹ tokens): the test corpus stays on the exact path
+    // production threshold (10⁹ tokens): the test corpus stays on the
+    // exact path
     val exactRow = stats()
+    assert(exactRow == DedupAuditQueries.graphTransitivity(DedupAuditQueries
+      .exactEdges(graft.sources.Tables.documents(spark, dir))).collect()(0))
     // lower the threshold below the corpus size: the banded source must
-    // engage WITHOUT the explicit graft.q255.banded conf
-    spark.conf.set("graft.q255.autoBandedTokens", "1")
-    val autoRow = try stats()
-      finally spark.conf.unset("graft.q255.autoBandedTokens")
+    // engage through the same probe
+    val autoRow = DedupAuditQueries
+      .q255DupGraphTransitivityAuto(spark, dir, bandedAbove = 1L).collect()(0)
     assert(autoRow.getLong(1) <= exactRow.getLong(1),
       s"auto-banded n_edges ${autoRow.getLong(1)} > exact ${exactRow.getLong(1)}")
     assert(autoRow.getLong(1) >= (exactRow.getLong(1) * 0.85).toLong,
       s"auto-banded n_edges ${autoRow.getLong(1)} lost >15% of " +
         s"exact ${exactRow.getLong(1)}")
-    // explicit conf still wins over the probe in BOTH directions
-    spark.conf.set("graft.q255.banded", "false")
-    spark.conf.set("graft.q255.autoBandedTokens", "1")
-    val forcedExact = try stats() finally {
-      spark.conf.unset("graft.q255.banded")
-      spark.conf.unset("graft.q255.autoBandedTokens")
-    }
-    assert(forcedExact.getLong(1) == exactRow.getLong(1),
-      "explicit graft.q255.banded=false must override the probe")
   }
 }

@@ -140,11 +140,8 @@ class BpeSpec extends SparkTestBase {
   test("window=1 degrades to the sequential algorithm with identical output") {
     val texts = Seq("abab abc a b", "aaa abab ab", "xyz ab abc aaa")
     val df = texts.toDF("text")
-    spark.conf.set("graft.bpe.window", "1")
-    try {
-      val got = Bpe.learnMerges(df, "text", 4)
-        .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
-      assert(got == referenceMerges(wordTally(texts), 4))
-    } finally spark.conf.unset("graft.bpe.window")
+    val got = Bpe.learnMergesWithRounds(df, "text", 4, window = 1)._1
+      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
+    assert(got == referenceMerges(wordTally(texts), 4))
   }
 }

@@ -68,13 +68,11 @@ class CoresetSpec extends SparkTestBase {
 
   test("batch=1 degrades to the sequential algorithm with identical output") {
     val emb = graft.sources.Tables.embeddings(spark, sf())
-    spark.conf.set("graft.coreset.batch", "1")
-    try {
-      val got = Coreset.kCenterGreedy(emb, "vec_id", "embedding", k = 6, seedId = 0L)
-        .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
-      val pts = emb.select(col("vec_id"), col("embedding"))
-        .as[(Long, Seq[Float])].collect().toMap
-      assert(got == referenceKCenter(pts, 6, 0L))
-    } finally spark.conf.unset("graft.coreset.batch")
+    val got = Coreset.kCenterGreedyWithRounds(emb, "vec_id", "embedding",
+        k = 6, seedId = 0L, batchSize = 1)._1
+      .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
+    val pts = emb.select(col("vec_id"), col("embedding"))
+      .as[(Long, Seq[Float])].collect().toMap
+    assert(got == referenceKCenter(pts, 6, 0L))
   }
 }

@@ -767,7 +767,7 @@ class ExchangeBudgetSpec extends SparkTestBase {
     // above it, the pure shuffle contribution path must run broadcast-
     // free — and both modes must produce identical ranks.
     def run(thr: String): (String, Seq[org.apache.spark.sql.Row]) = {
-      spark.conf.set("graft.pagerank.broadcastNodes", thr)
+      spark.conf.set("graft.graph.broadcastNodes", thr)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
         val df = SparkEntry.queries("q79_pagerank")(spark, sf())
@@ -775,7 +775,7 @@ class ExchangeBudgetSpec extends SparkTestBase {
         (df.queryExecution.executedPlan.toString
           .split("== Initial Plan ==").head, rows)
       } finally {
-        spark.conf.unset("graft.pagerank.broadcastNodes")
+        spark.conf.unset("graft.graph.broadcastNodes")
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
     }

@@ -3,18 +3,18 @@ package graft
 /**
  * Bounds q237's HLL off-ramp against the exact plan (the same contract
  * SketchStatsSpec pins for q147): totals identical (they ride the same
- * rollup), distinct estimates within the lgK=14 sketch's error budget,
- * and the conf switches actually select the intended path.
+ * rollup) and distinct estimates within the lgK=14 sketch's error
+ * budget.
  */
 class NgramSketchSpec extends SparkTestBase {
 
   private def run(approx: Boolean) = {
-    spark.conf.set("graft.q237.approx", approx.toString)
-    try SparkEntry.queries("q237_ngram_diversity")(spark, sf())
+    import graft.queries.PretrainQueries.{q237NgramDiversityExact, q237NgramDiversityHll}
+    (if (approx) q237NgramDiversityHll(spark, sf())
+     else q237NgramDiversityExact(spark, sf()))
       .collect()
       .map(r => ((r.getString(0), r.getInt(1)), (r.getLong(2), r.getLong(3))))
       .toMap
-    finally spark.conf.unset("graft.q237.approx")
   }
 
   test("hll path matches the exact path within sketch error; totals exact") {

@@ -39,18 +39,15 @@ class SketchStatsSpec extends SparkTestBase {
     val exact = graft.queries.EventAnalytics
       .q115RollingDistinct(spark, dir)
       .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
-    spark.conf.set("graft.q115.approx", "true")
-    try {
-      val approx = graft.queries.EventAnalytics
-        .q115RollingDistinct(spark, dir) // flag dispatches to the HLL plan
-        .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
-      assert(approx.keySet == exact.keySet)
-      exact.foreach { case (day, ex) =>
-        val ap = approx(day)
-        assert(math.abs(ap - ex) <= math.max(1L, math.round(ex * 0.02)),
-          s"day=$day approx=$ap exact=$ex")
-      }
-    } finally spark.conf.unset("graft.q115.approx")
+    val approx = graft.queries.EventAnalytics
+      .q115RollingDistinctHll(spark, dir)
+      .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+    assert(approx.keySet == exact.keySet)
+    exact.foreach { case (day, ex) =>
+      val ap = approx(day)
+      assert(math.abs(ap - ex) <= math.max(1L, math.round(ex * 0.02)),
+        s"day=$day approx=$ap exact=$ex")
+    }
   }
 
   test("q147 HLL variant: union estimates within 2%, intersection within 5% of union") {
@@ -61,51 +58,36 @@ class SketchStatsSpec extends SparkTestBase {
       }.toMap
     val exact = collect(
       graft.queries.CorpusQueries.q147SourceOverlap(spark, dir))
-    spark.conf.set("graft.q147.approx", "true")
-    try {
-      val approx = collect(
-        graft.queries.CorpusQueries.q147SourceOverlap(spark, dir))
-      assert(approx.keySet == exact.keySet)
-      exact.foreach { case (k, (exInter, exUnion)) =>
-        val (apInter, apUnion) = approx(k)
-        // union is a direct HLL estimate: sketch standard error (~0.8%
-        // at lgK=12), bounded at 2%. The intersection is a DIFFERENCE
-        // of three estimates, so its error scales with the UNION size,
-        // not its own — the principled bound is relative to the union.
-        assert(math.abs(apUnion - exUnion) <= math.max(1L, exUnion / 50),
-          s"pair=$k union approx=$apUnion exact=$exUnion")
-        assert(math.abs(apInter - exInter) <= math.max(1L, exUnion / 20),
-          s"pair=$k inter approx=$apInter exact=$exInter (union=$exUnion)")
-      }
-    } finally spark.conf.unset("graft.q147.approx")
+    val approx = collect(
+      graft.queries.CorpusQueries.q147SourceOverlapHll(spark, dir))
+    assert(approx.keySet == exact.keySet)
+    exact.foreach { case (k, (exInter, exUnion)) =>
+      val (apInter, apUnion) = approx(k)
+      // union is a direct HLL estimate: sketch standard error (~0.8%
+      // at lgK=12), bounded at 2%. The intersection is a DIFFERENCE
+      // of three estimates, so its error scales with the UNION size,
+      // not its own — the principled bound is relative to the union.
+      assert(math.abs(apUnion - exUnion) <= math.max(1L, exUnion / 50),
+        s"pair=$k union approx=$apUnion exact=$exUnion")
+      assert(math.abs(apInter - exInter) <= math.max(1L, exUnion / 20),
+        s"pair=$k inter approx=$apInter exact=$exInter (union=$exUnion)")
+    }
   }
 
   test("q147 auto-switches to the HLL plan past the shingle threshold") {
     val dir = "/root/testdata/sf0.01"
     def planOf(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.analyzed.toString
-    // default threshold (2e9): sf0.01 stays on the exact plan
+    // production threshold (2e9): sf0.01 stays on the exact plan
     val exactPlan = planOf(graft.queries.CorpusQueries.q147SourceOverlap(spark, dir))
     assert(!exactPlan.contains("hll_sketch_agg"),
-      "sf0.01 under the default threshold must take the exact path")
-    // a tiny threshold flips the SAME call to the sketch plan — no
-    // flag, the map-only occurrence probe decides
-    spark.conf.set("graft.q147.autoApproxShingles", "1")
-    try {
-      val hllPlan = planOf(graft.queries.CorpusQueries.q147SourceOverlap(spark, dir))
-      assert(hllPlan.contains("hll_sketch_agg"),
-        "past the threshold the auto path must use the HLL sketch")
-    } finally spark.conf.unset("graft.q147.autoApproxShingles")
-    // an explicit flag always wins over the probe
-    spark.conf.set("graft.q147.approx", "false")
-    spark.conf.set("graft.q147.autoApproxShingles", "1")
-    try {
-      assert(!planOf(graft.queries.CorpusQueries.q147SourceOverlap(spark, dir))
-        .contains("hll_sketch_agg"))
-    } finally {
-      spark.conf.unset("graft.q147.approx")
-      spark.conf.unset("graft.q147.autoApproxShingles")
-    }
+      "sf0.01 under the production threshold must take the exact path")
+    // a tiny threshold flips the SAME switch to the sketch plan — the
+    // corpus-size probe decides
+    val hllPlan = planOf(graft.queries.CorpusQueries
+      .q147SourceOverlapAuto(spark, dir, sketchAbove = 1L))
+    assert(hllPlan.contains("hll_sketch_agg"),
+      "past the threshold the auto path must use the HLL sketch")
   }
 
   test("approx_percentile within 2% relative error of exact percentile") {
@@ -142,22 +124,19 @@ class SketchStatsSpec extends SparkTestBase {
         (r.getString(0), r.getDate(1).toString) ->
           (r.getDouble(2), r.getDouble(3))
       }.toMap
-    spark.conf.set("graft.q92.approx", "true")
-    try {
-      val approx = collectBands(
-        graft.queries.StatsQueries.q92PercentileBands(spark, dir))
-      assert(approx.keySet == exact.keySet)
-      exact.foreach { case (k, (e50, e90, _)) =>
-        val (a50, a90, a99) = approx(k)
-        Seq((e50, a50, "p50"), (e90, a90, "p90")).foreach { case (e, a, w) =>
-          assert(math.abs(a - e) <= math.abs(e) * 0.025 + 0.01,
-            s"group=$k $w approx=$a exact=$e")
-        }
-        val (lo, hi) = bracket(k)
-        assert(a99 >= lo - 0.01 && a99 <= hi + 0.01,
-          s"group=$k p99 approx=$a99 outside exact rank bracket [$lo, $hi]")
+    val approx = collectBands(
+      graft.queries.StatsQueries.q92PercentileBandsSketch(spark, dir))
+    assert(approx.keySet == exact.keySet)
+    exact.foreach { case (k, (e50, e90, _)) =>
+      val (a50, a90, a99) = approx(k)
+      Seq((e50, a50, "p50"), (e90, a90, "p90")).foreach { case (e, a, w) =>
+        assert(math.abs(a - e) <= math.abs(e) * 0.025 + 0.01,
+          s"group=$k $w approx=$a exact=$e")
       }
-    } finally spark.conf.unset("graft.q92.approx")
+      val (lo, hi) = bracket(k)
+      assert(a99 >= lo - 0.01 && a99 <= hi + 0.01,
+        s"group=$k p99 approx=$a99 outside exact rank bracket [$lo, $hi]")
+    }
   }
 
   test("q196 HLL registers: brute-force replay equality + merge = union") {

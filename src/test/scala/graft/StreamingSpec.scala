@@ -51,6 +51,24 @@ class StreamingSpec extends SparkTestBase {
     cache.dropAll()
   }
 
+  test("a string cursor with a quote and a backslash round-trips through state as JSON") {
+    implicit val sqlCtx = spark.sqlContext
+    val cache = SparkCache.fresh(spark, "graft_test_stream_cursor")
+    val catalog = ConfiguredCatalog(Seq(ConfiguredStream("live", new StructType())))
+    val input = MemoryStream[String]
+    input.addData("""{"id":1,"name":"a\"b\\c"}""")
+    val q = StreamingIngest.ingestJsonl(
+      input.toDS(), declared, cache, catalog, "live", cursorField = Some("name"),
+      checkpointDir = Files.createTempDirectory("graft-ckpt-c").toString)
+    q.awaitTermination(60000)
+    val st = cache.latestState("stream", "live")
+    assert(st.isDefined, "no state written")
+    val node = AirbyteMessage.mapper.readTree(st.get) // throws on invalid JSON
+    assert(node.get("cursor").asText() == "a\"b\\c", st.get)
+    assert(node.get("batch_id").asLong() == 0L, st.get)
+    cache.dropAll()
+  }
+
   test("streaming merge-upsert across micro-batches is idempotent last-wins") {
     implicit val sqlCtx = spark.sqlContext
     val cache = SparkCache.fresh(spark, "graft_test_stream_merge")

@@ -331,6 +331,24 @@ class SubprocessSpec extends SparkTestBase {
     cache.dropAll()
   }
 
+  test("a stream name with a quote gives parseable RECORD and STATE lines") {
+    val name = "we\"ird"
+    val cache = SparkCache.fresh(spark, "graft_test_replay_quote")
+    cache.writeStream(name, Seq((1L, "a"), (2L, "b")).toDF("id", "name"),
+      ConfiguredCatalog(Seq(ConfiguredStream(name, usersSchema))))
+    cache.writeState("scripted", name, """{"cursor": 2}""")
+    val records = Destination.recordMessages(cache, name).collect()
+      .map(l => AirbyteMessage.parse(l).getOrElse(fail(s"unparseable: $l")))
+    assert(records.length == 2)
+    assert(records.forall(m =>
+      m.messageType == MessageType.RECORD && m.streamName.contains(name)))
+    val state = Destination.stateMessage(cache, "scripted", name)
+      .map(l => AirbyteMessage.parse(l).getOrElse(fail(s"unparseable: $l")))
+    assert(state.exists(m =>
+      m.messageType == MessageType.STATE && m.streamName.contains(name)))
+    cache.dropAll()
+  }
+
   test("destination subprocess pump delivers all records") {
     val src = new SubprocessSource("scripted", catalog, scriptedConnector(10))
     val cache = SparkCache.fresh(spark, "graft_test_pump")
