@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.OverlapFunctions.sortedOverlap
 import graft.sources.Tables
 
 /**
@@ -114,16 +115,17 @@ object DedupAuditQueries {
     * bandedEdges ⊆ exactEdges — the transitivity statistic drifts
     * only through the ≤4%-per-edge recall loss, never through false
     * edges. The only corpus-sized exchange is the band-key self-join
-    * (each class contributes 9 keys); the verify is per-candidate
-    * array intersection, never a posting re-join. */
+    * (each class contributes 9 keys); the verify is a per-candidate
+    * sorted-set merge walk, never a posting re-join. */
   /** Distinct-shingle classes WITH their 9-component MinHash
     * signatures: (id, sh, n, sig) — shared by the banded q255 pair
-    * source and q260's estimator calibration. */
+    * source and q260's estimator calibration. `sh` is ascending and
+    * distinct, the input `sortedOverlap` verifies by merge walk. */
   private def sigClasses(docs: DataFrame): DataFrame =
     docs.groupBy(col("text")).agg(min(col("doc_id")).as("id"))
       .select(col("id"), graft.functions.TextHashFunctions
         .shingleMinhash(col("text"), 9, 3).as("sm"))
-      .select(col("id"), array_distinct(col("sm.shingles")).as("sh"),
+      .select(col("id"), sort_array(array_distinct(col("sm.shingles"))).as("sh"),
         col("sm.sig").as("sig"))
       .filter(size(col("sh")) > 0)
       .select(col("id"), col("sh"), size(col("sh")).cast(LongType).as("n"),
@@ -147,14 +149,15 @@ object DedupAuditQueries {
     val cls = sigClasses(docs)
       .localCheckpoint() // reused: band explode AND the capped verify side
     val capSets = cappedPosts(cls.select(col("id"), col("sh"), col("n")))
-      .groupBy(col("id"), col("n")).agg(collect_list(col("s")).as("cs"))
+      // ascending for the merge-walk verify; distinct already (each
+      // class posts each of its distinct shingles once)
+      .groupBy(col("id"), col("n")).agg(sort_array(collect_list(col("s"))).as("cs"))
     bandCandidates(cls)
       .join(capSets.select(col("id").as("u"), col("n").as("na"),
         col("cs").as("csa")), "u")
       .join(capSets.select(col("id").as("v"), col("n").as("nb"),
         col("cs").as("csb")), "v")
-      .withColumn("inter",
-        size(array_intersect(col("csa"), col("csb"))).cast(LongType))
+      .withColumn("inter", sortedOverlap(col("csa"), col("csb")).cast(LongType))
       .filter(col("inter") * 1000 >= (col("na") + col("nb") - col("inter")) * 300)
       .select(col("u"), col("v"))
   }
@@ -475,7 +478,8 @@ object DedupAuditQueries {
   // own candidate set (never all pairs) and every pair has est ≥ 1.
   //
   // 100 TB shape: exact-class collapse, one band-key exchange, then
-  // per-candidate array intersections; the rollup output is ≤ 9 rows.
+  // per-candidate merge walks over the sorted shingle sets
+  // (`sortedOverlap`); the rollup output is ≤ 9 rows.
   // ------------------------------------------------------------------
   def q260MinhashCalibration(spark: SparkSession, dir: String): DataFrame = {
     val cls = sigClasses(Tables.documents(spark, dir))
@@ -495,8 +499,7 @@ object DedupAuditQueries {
           when(element_at(col("siga"), j + 1) ===
             element_at(col("sigb"), j + 1), 1L).otherwise(0L))
         .reduce(_ + _))
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast(LongType))
+      .withColumn("inter", sortedOverlap(col("sha"), col("shb")).cast(LongType))
       .select(col("est"),
         expr("CAST(inter * 1000000 div (na + nb - inter) AS BIGINT)")
           .as("jac_ppm"))
@@ -566,7 +569,7 @@ object DedupAuditQueries {
   //
   // Scale shape: exact-class collapse → ONE 16-component signature
   // pass → q260's band-key self-join on class ids → per-candidate
-  // component compare + exact array intersection → 3-row rollup.
+  // component compare + exact sorted-set overlap → 3-row rollup.
   // All-integer error arithmetic (est·10⁶ div k, DECIMAL-widened
   // squares per the ppm-product convention).
   // ------------------------------------------------------------------
@@ -578,7 +581,7 @@ object DedupAuditQueries {
       .groupBy(col("text")).agg(min(col("doc_id")).as("id"))
       .select(col("id"), graft.functions.TextHashFunctions
         .shingleMinhash(col("text"), 16, 3).as("sm"))
-      .select(col("id"), array_distinct(col("sm.shingles")).as("dsh"),
+      .select(col("id"), sort_array(array_distinct(col("sm.shingles"))).as("dsh"),
         col("sm.sig").as("sg"))
       .filter(size(col("dsh")) > 0)
       .select(col("id"), col("dsh"),
@@ -602,7 +605,7 @@ object DedupAuditQueries {
         col("n").as("nb"), col("sg").as("sgb")), "ib")
       .select(
         (Seq(
-          size(array_intersect(col("da"), col("db"))).cast(LongType).as("inter"),
+          sortedOverlap(col("da"), col("db")).cast(LongType).as("inter"),
           (col("na") + col("nb")).as("nn")) ++
         (0 until 16).map(j =>
           when(element_at(col("sga"), j + 1) === element_at(col("sgb"), j + 1),
@@ -834,8 +837,12 @@ object DedupAuditQueries {
       .groupBy(col("id"), col("n"))
       .agg(collect_list(col("s")).as("sh"),
         collect_list(when(col("df") <= 50, col("s"))).as("capped"))
-      .select(col("id"), col("n"), col("sh"),
-        col("capped"), size(col("capped")).cast(LongType).as("nc"))
+      // both lists are ascending for the merge-walk verify and distinct
+      // already: each class posts each distinct shingle once, and the df
+      // join keeps one row per shingle
+      .select(col("id"), col("n"), sort_array(col("sh")).as("sh"),
+        sort_array(col("capped")).as("capped"),
+        size(col("capped")).cast(LongType).as("nc"))
       .localCheckpoint() // both sides of the pair join
     val inv = samp.select(col("id"), explode(col("sh")).as("s"))
     val cand = inv.alias("a")
@@ -848,9 +855,9 @@ object DedupAuditQueries {
       .join(samp.select(col("id").as("ib"), col("sh").as("fb"),
         col("n").as("nb"), col("capped").as("cb"), col("nc").as("ncb")), "ib")
       .select(
-        size(array_intersect(col("fa"), col("fb"))).cast(LongType).as("if_"),
+        sortedOverlap(col("fa"), col("fb")).cast(LongType).as("if_"),
         (col("na") + col("nb")).as("nf"),
-        size(array_intersect(col("ca"), col("cb"))).cast(LongType).as("ic"),
+        sortedOverlap(col("ca"), col("cb")).cast(LongType).as("ic"),
         (col("nca") + col("ncb")).as("nc2"))
       .select(
         expr("CAST(CAST(if_ AS DECIMAL(38,0)) * 1000000 div (nf - if_) AS BIGINT)")

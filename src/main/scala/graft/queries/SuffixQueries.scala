@@ -186,14 +186,13 @@ object SuffixQueries {
   // ~2/(w+1) of all grams are kept — the guaranteed-recall/sublinear-
   // index trade the paper proves. Overlap = fingerprint-hash join.
   //
-  // Scale shape: gram hashing is the compiled rolling-hash kernel
-  // (one pass per doc), window minima are per-doc frame aggregates
-  // (one doc_id shuffle), and the pair join carries only selected
+  // Scale shape: gram hashing and winnowing are two compiled kernels
+  // in one projection per class (`rollingWindowHashes` → `winnow`, no
+  // per-gram rows, no shuffle), and the pair join carries only selected
   // fingerprints with a document-frequency cap (≤ 50 docs) so
   // boilerplate hashes can't go quadratic — the q114 stop-token rule.
   // ------------------------------------------------------------------
   def q165Winnowing(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val W = 4
     // exact-duplicate collapse FIRST (the q31/q114/q134 guard):
     // fingerprints depend only on text, so winnowing runs once per
@@ -203,29 +202,15 @@ object SuffixQueries {
       .groupBy(col("text"))
       .agg(min(col("doc_id")).as("cid"),
         collect_list(col("doc_id")).as("members"))
-      .localCheckpoint() // read by the gram pass and both expansions
-    val grams = classes
-      .select(col("cid"), posexplode(
-        graft.functions.TextHashFunctions.rollingWindowHashes(col("text"), 3)))
-      .select(col("cid"), (col("pos") + 1).cast(LongType).as("q"),
-        col("col").as("h"))
-      .localCheckpoint() // read by the window pass and the winner join
-    val perDoc = Window.partitionBy(col("cid"))
-    val wins = grams
-      .withColumn("n", count(lit(1)).over(perDoc))
-      .withColumn("minh", min(col("h")).over(
-        perDoc.orderBy(col("q").asc).rowsBetween(0, W - 1)))
-      .filter(col("q") <= col("n") - W + 1)
-      .select(col("cid"), col("q").as("i"), col("minh"))
-    // rightmost minimal gram of each window; fingerprint set = distinct
-    // (class, hash) of the selected grams
-    val fp = wins
-      .join(grams.select(col("cid"), col("q"), col("h").as("minh")),
-        Seq("cid", "minh"))
-      .filter(col("q") >= col("i") && col("q") <= col("i") + W - 1)
-      .groupBy(col("cid"), col("i"), col("minh"))
-      .agg(max(col("q")).as("sel_q"))
-      .select(col("cid"), col("minh").as("h")).distinct()
+      .localCheckpoint() // read by the fingerprint pass and both expansions
+    // fingerprint set = the distinct window minima per class: which
+    // position of a tied minimum a window selects (MOSS takes the
+    // rightmost) never changes the selected hash, and only hashes are
+    // kept
+    val fp = classes.select(col("cid"), size(col("members")).as("copies"),
+      explode(graft.functions.OverlapFunctions.winnow(
+        graft.functions.TextHashFunctions.rollingWindowHashes(col("text"), 3), W))
+        .as("h"))
     // document frequency counts DOCS (class copies included), matching
     // the uncollapsed formulation the oracle computes. Bucket-grouped
     // pair engine (round 16, the PostingPairs shape): ONE groupBy(h)
@@ -238,8 +223,7 @@ object SuffixQueries {
     // ≥ 1 copy, so a hot fingerprint never buffers O(df) class ids, and
     // a bucket with more than cap classes is dropped either way
     val cap = 50
-    val copies = classes.select(col("cid"), size(col("members")).as("copies"))
-    val buckets = fp.join(copies, "cid")
+    val buckets = fp
       .groupBy(col("h"))
       .agg(graft.functions.BoundedCollectList.boundedCollectList(
         col("cid"), cap + 1).as("cids"), sum(col("copies")).as("df"))

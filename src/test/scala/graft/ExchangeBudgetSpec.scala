@@ -248,9 +248,10 @@ class ExchangeBudgetSpec extends SparkTestBase {
                                  // window passes ((user_id) satisfies
                                  // the (user_id,sid) clustering); then
                                  // the 4-row audit agg + final sort
-    "q165_winnowing"      -> 2,  // class collapse/grams/window minima/
-                                 // fingerprint buckets sit behind
-                                 // checkpoints (r16: bucket-grouped
+    "q165_winnowing"      -> 2,  // class collapse and fingerprint
+                                 // buckets sit behind checkpoints
+                                 // (winnow is per-class, no gram
+                                 // rows; r16: bucket-grouped
                                  // pair engine swallowed the df-cap
                                  // agg + semi + pair-hash join); the
                                  // final assembly shuffles: class-pair

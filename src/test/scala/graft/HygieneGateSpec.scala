@@ -24,6 +24,12 @@ import org.scalatest.funsuite.AnyFunSuite
  * runtime-constructed bad strings, so the gate itself is pinned to
  * actually catch each class. The scan skips THIS file only (its
  * pattern definitions would self-match).
+ *
+ * A second source gate keeps every `src/main` Catalyst expression on
+ * real codegen: no expression mixes in `CodegenFallback` (which runs
+ * the kernel interpreted and splits the whole-stage span), and nothing
+ * imports it. Comments are stripped first, so prose about the trait
+ * stays legal.
  */
 class HygieneGateSpec extends AnyFunSuite {
 
@@ -79,6 +85,18 @@ class HygieneGateSpec extends AnyFunSuite {
     imports ++ urls ++ buckets ++ internals ++ creds ++ copies
   }
 
+  private val fallbackMixin =
+    """\b(extends|with)\s+([A-Za-z0-9_]+\.)*CodegenFallback\b""".r
+  private val fallbackImport = """(?m)^\s*import\s+[^\n]*\bCodegenFallback\b""".r
+  private val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+
+  /** `CodegenFallback` mix-ins and imports in one file's code. */
+  private[graft] def codegenFallbackUses(text: String): Seq[String] = {
+    val code = comments.replaceAllIn(text, " ")
+    (fallbackMixin.findAllIn(code) ++ fallbackImport.findAllIn(code))
+      .map(_.trim).toSeq
+  }
+
   private def scalaSources: Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -121,5 +139,34 @@ class HygieneGateSpec extends AnyFunSuite {
     assert(violations(
       "import org.apache.spark.sql.DataFrame\n" +
         "// see https" + sep + "docs.airbyte.com/platform").isEmpty)
+  }
+
+  test("source gate: no src/main expression mixes in CodegenFallback") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from repo root: $root")
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        codegenFallbackUses(text).map(u => s"$p -> $u")
+      }
+    assert(offenders.isEmpty,
+      s"CodegenFallback in src/main (give the kernel a doGenCode):\n  " +
+        offenders.mkString("\n  "))
+  }
+
+  test("the CodegenFallback matcher catches each mix-in and import form") {
+    val bad = Seq(
+      "case class K(child: Expression) extends UnaryExpression with CodegenFallback {",
+      "case class K(child: Expression) extends UnaryExpression\n    with codegen.CodegenFallback",
+      "case class K() extends LeafExpression with CodegenFallback with Nondeterministic",
+      "import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback",
+      "import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback}")
+    bad.foreach(b => assert(codegenFallbackUses(b).nonEmpty, s"matcher missed: $b"))
+    // prose about the trait, in line and block comments, stays clean
+    assert(codegenFallbackUses(
+      "// the former kernel mixed in with CodegenFallback\n" +
+        "/** Real codegen (not CodegenFallback): inlines.\n  * extends CodegenFallback */\n" +
+        "case class K(child: Expression) extends UnaryExpression {").isEmpty)
   }
 }

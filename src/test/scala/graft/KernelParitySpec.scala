@@ -306,4 +306,114 @@ class KernelParitySpec extends SparkTestBase {
       .collect()
     assert(bad.isEmpty, bad.take(3).mkString("; "))
   }
+
+  // elements chosen so that byte order and UTF-16 order disagree:
+  // U+E000 (EE 80 80) sorts below U+1F600 (F0 9F 98 80) by bytes but
+  // above its surrogate pair (D83D DE00) by UTF-16 code units
+  private val setElem: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf("", "a", "ab", "abc", "abd", "b", "Z", "é", "e\u0301",
+      "日本", "日本語", "\uE000", "\uFFFD", "\uD83D\uDE00", "\uD83D\uDE00x",
+      "\uD800\uDC00", "a\u0000"),
+    3 -> Gen.stringOfN(2, Gen.oneOf('a', 'b', '\u00e9', '\uE000')),
+    1 -> Gen.const(null: String))
+  private val setArr: Gen[Seq[String]] = Gen.frequency(
+    1 -> Gen.const(null: Seq[String]),
+    1 -> Gen.const(Seq.empty[String]),
+    8 -> Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, setElem)))
+
+  test("sortedOverlap equals size(array_intersect) on sort_array(array_distinct) inputs") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.{OverlapFunctions, SortedOverlapExpression}
+    val fixed = Seq[(Seq[String], Seq[String])](
+      (Seq("\uD83D\uDE00", "\uE000"), Seq("\uE000")),
+      (Seq("\uD83D\uDE00", "\uE000", "\uFFFD"), Seq("\uFFFD", "\uD83D\uDE00")),
+      (Seq("a", "ab", "abc"), Seq("ab", "abd", "abc")),
+      (Seq.empty, Seq("a")), (Seq.empty, Seq.empty),
+      (null, Seq("a")), (Seq("a", null), Seq(null, "b", "a")))
+    val random = (0 until 400).map { i =>
+      val p = Gen.Parameters.default
+      (setArr.pureApply(p, Seed(2L * i)), setArr.pureApply(p, Seed(2L * i + 1)))
+    }
+    val pairs = (fixed ++ random).zipWithIndex
+      .map { case ((a, b), i) => (i, a, b) }
+    val prepared = pairs.toDF("i", "a", "b")
+      .repartition(2) // a real exchange scan: no ConvertToLocalRelation fold
+      .select(col("i"), sort_array(array_distinct(col("a"))).as("sa"),
+        sort_array(array_distinct(col("b"))).as("sb"))
+    val df = prepared.select(col("i"), col("sa"), col("sb"),
+      OverlapFunctions.sortedOverlap(col("sa"), col("sb")).as("k"),
+      when(col("sa").isNotNull && col("sb").isNotNull,
+        size(array_intersect(col("sa"), col("sb")))).as("ref"))
+    val rows = df.collect()
+    assert(rows.length == pairs.size)
+    rows.foreach { r =>
+      val k = if (r.isNullAt(3)) None else Some(r.getInt(3))
+      val ref = if (r.isNullAt(4)) None else Some(r.getInt(4))
+      val (sa, sb) = (Option(r.getSeq[String](1)), Option(r.getSeq[String](2)))
+      assert(k == ref, s"codegen: sa=$sa sb=$sb")
+      // interpreted eval over the same sorted inputs
+      val lit = (x: Option[Seq[String]]) =>
+        Literal.create(x.orNull, ArrayType(StringType))
+      val interp = Option(SortedOverlapExpression(lit(sa), lit(sb)).eval(null))
+      assert(interp == ref, s"interpreted: sa=$sa sb=$sb")
+    }
+    assert(rows.count(_.isNullAt(3)) > 0 && rows.exists(r => !r.isNullAt(3) && r.getInt(3) > 1),
+      "the sample must carry null arrays and multi-element overlaps")
+    val plan = df.queryExecution.executedPlan.toString
+    val line = plan.linesIterator.find(_.contains("sorted_overlap"))
+    assert(line.isDefined, s"kernel not in executed plan:\n$plan")
+    assert(line.get.contains("*"), s"sorted_overlap fell out of whole-stage codegen:\n$plan")
+  }
+
+  test("winnow equals the window-plan fingerprint set (distinct rightmost window minima)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.{OverlapFunctions, WinnowExpression}
+    val hash = Gen.oneOf("0a", "0b", "1f", "7c", "7d", "e0", "ff")
+    val fixed = Seq(Seq.empty[String], Seq("7c"), Seq("7c", "0a", "1f"),
+      Seq("7c", "0a", "1f", "0b"), Seq.fill(9)("e0"),
+      Seq("1f", "0a", "7c", "0a", "ff", "0a", "e0", "0a"),
+      Seq("ff", "e0", "7d", "7c", "1f", "0b", "0a"))
+    val random = (0 until 300).map(i => Gen.choose(0, 16)
+      .flatMap(n => Gen.listOfN(n, hash)).pureApply(Gen.Parameters.default, Seed(i.toLong)))
+    val arrays = (fixed ++ random).zipWithIndex.map { case (a, i) => (i.toLong, a) }
+    Seq(1, 3, 4).foreach { w =>
+      val base = arrays.toDF("id", "hs").repartition(2)
+      // the former q165 plan: per-position window minima over full
+      // windows, the rightmost minimal position, then distinct hashes
+      val grams = base.select(col("id"), posexplode(col("hs")))
+        .select(col("id"), (col("pos") + 1).cast(LongType).as("q"), col("col").as("h"))
+      val perDoc = Window.partitionBy(col("id"))
+      val wins = grams
+        .withColumn("n", count(lit(1)).over(perDoc))
+        .withColumn("minh", min(col("h")).over(
+          perDoc.orderBy(col("q").asc).rowsBetween(0, w - 1)))
+        .filter(col("q") <= col("n") - w + 1)
+        .select(col("id"), col("q").as("i"), col("minh"))
+      val ref = wins
+        .join(grams.select(col("id"), col("q"), col("h").as("minh")), Seq("id", "minh"))
+        .filter(col("q") >= col("i") && col("q") <= col("i") + w - 1)
+        .groupBy(col("id"), col("i"), col("minh")).agg(max(col("q")).as("sel_q"))
+        .select(col("id"), col("minh")).distinct()
+        .collect().groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)).toSet }
+      val df = base.select(col("id"), OverlapFunctions.winnow(col("hs"), w).as("fp"))
+      val got = df.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      arrays.foreach { case (id, hs) =>
+        val fp = got(id)
+        assert(fp.distinct == fp, s"w=$w duplicates in $fp")
+        assert(fp.toSet == ref.getOrElse(id, Set.empty), s"w=$w codegen hs=$hs")
+        val interp = WinnowExpression(Literal.create(hs, ArrayType(StringType)), w)
+          .eval(null).asInstanceOf[ArrayData]
+        assert((0 until interp.numElements()).map(interp.getUTF8String(_).toString) == fp,
+          s"w=$w interpreted hs=$hs")
+        if (hs.size < w) assert(fp.isEmpty, s"w=$w n=${hs.size} must give no fingerprint")
+      }
+      val plan = df.queryExecution.executedPlan.toString
+      val line = plan.linesIterator.find(_.contains("winnow"))
+      assert(line.isDefined, s"kernel not in executed plan:\n$plan")
+      assert(line.get.contains("*"), s"winnow fell out of whole-stage codegen:\n$plan")
+    }
+    assert(WinnowExpression(Literal.create(null, ArrayType(StringType)), 4).eval(null) == null)
+  }
 }
